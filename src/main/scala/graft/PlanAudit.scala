@@ -32,8 +32,9 @@ object PlanAudit {
                        //   memoized triple table — no pair SELF-join (the canon
                        //   broadcast join belongs to the triple chain and is
                        //   expected; ADVICE r5)
-    "graph_pagerank",  // expect ranks read from the round-truncated checkpoint —
-                       //   constant-depth plan however many iterations ran (r5)
+    "graph_pagerank",  // expect a LocalTableScan and no shuffle: the dictionary-sized
+                       //   graph ranks on the driver; forced distributed, ranks read
+                       //   from the round-truncated checkpoint (RDDScan)
     "graph_triangles", // expect InMemory mutual-edge reuse on all three legs (r5)
     "topk")            // expect TakeOrderedAndProject, not global sort
 

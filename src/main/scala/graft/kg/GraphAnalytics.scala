@@ -1,8 +1,12 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** Downstream analytics over the CONSTRUCTED graph — the consumption
@@ -27,13 +31,10 @@ import org.apache.spark.storage.StorageLevel
   *    so PageRank costs O(k·nodes) per iteration regardless of how
   *    dense raw co-occurrence is (head entities co-occur with
   *    everything — unsparsified, the fixpoint join would be quadratic);
-  *  - PageRank is fixed-point INTEGER arithmetic (contribution =
-  *    rank div out-degree on a 10^6 scale; damping 0.85 as 85/100), so
-  *    results are bit-exact across engines, partitionings, and
-  *    reduction orders — no float-summation-order dependence — and each
-  *    round is lineage-truncated ([[ConnectedComponents.materializeRound]])
-  *    exactly like the CC fixpoint, keeping plan depth constant across
-  *    iterations.
+  *  - PageRank is fixed-point INTEGER arithmetic (damping 0.85 as
+  *    85/100 on a 10^6 scale), so results are bit-exact across engines,
+  *    partitionings and reduction orders — which is also what lets a
+  *    dictionary-sized graph rank on the driver with the same integers.
   */
 object GraphAnalytics {
 
@@ -114,141 +115,138 @@ object GraphAnalytics {
   /** PageRank scale: initial rank per node (1.0 in fixed-point). */
   val PrScale = 1000000L
 
-  /** Fixed-point integer PageRank over directed edges (src, dst):
-    * rank_0 = 10^6; rank_{k+1}(n) = 0.15·10^6 + 0.85·Σ_{(m,n)∈E}
-    * (rank_k(m) div outdeg(m)), all in BIGINT arithmetic (div =
-    * integral division), so every engine and every reduction order
-    * produces the same integers. Nodes = distinct edge sources (in a
-    * top-k graph every participating node has out-edges, so none
-    * dangle); nodes without in-edges keep the 0.15 base via the left
-    * join. The edge+degree frame is persisted once (DISK_ONLY — same
-    * recompute-from-lineage contract as the dedup sketches; released
-    * on return when `releaseInputs`); rank lineage is truncated every
-    * [[TruncateEvery]] rounds (and always at the final round), so plan
-    * depth stays bounded by a constant however many iterations run
-    * while the driver pays far fewer whole-job round trips (r6).
-    *
-    * Overflow bound: total mass is conserved (a node distributes at
-    * most its own rank), so every rank ≤ nodes·10^6 and the damping
-    * product 85·Σ stays under 2^63 up to ~10^11 nodes; beyond that the
-    * ANSI-mode multiply throws loudly rather than corrupting ranks. */
-  /** Lineage-truncation cadence for the PageRank loops (r6): rounds
-    * between [[ConnectedComponents.materializeRound]] calls. Each
-    * truncation is a whole eager Spark job of fixed scheduling latency;
-    * truncating every round made a 3-iteration rank 3 driver-looped
-    * jobs of mostly scheduling overhead at dictionary scale, while the
-    * only thing truncation buys — bounded plan depth across
-    * iterations — needs only a bounded CADENCE, not cadence 1. Depth
-    * between truncations stays ≤ this constant (each round is one
-    * join + one agg + one left join on top of the last materialized
-    * rank), so analysis cost per round is O(1) in `iters` exactly as
-    * before. Under `releaseInputs` the FINAL round is additionally
-    * forced eager, which is what makes releasing the cached
-    * edge/degree frames safe (ADVICE r5: they used to leak for the
-    * JVM lifetime); otherwise the last partial chain stays lazy and
-    * the consumer's action computes it. Cadence 2 measured
-    * best at sf0.1/local[32] (in-process A/B, steady-state best-of-3:
-    * cadence 1 → 1.84 s, 2 → 1.58 s, 4 → 1.80 s — the fully-chained
-    * single job re-reads the cached edge frame once per round inside
-    * one job and loses the pipelining the two-job split gets). */
-  val TruncateEvery = 2
-
-  /** `releaseInputs` (ADVICE r5): true → the cached edge/degree/node
-    * frames are unpersisted on return (safe: the final round is always
-    * materialized), which is what a long-lived driver refreshing
-    * analytics per corpus version needs — without it every refresh
-    * leaks DISK_ONLY blocks for the JVM lifetime. False (default) keeps
-    * the caches, which repeat ad-hoc calls over the same edge frame
-    * dedupe by canonicalized plan — the right trade for interactive /
-    * measurement use (measured r6: releasing unconditionally made every
-    * repeat call rebuild the window+degree subtree, +0.6 s per call at
-    * sf0.1). [[Pipeline.runAnalytics]] passes true. */
-  def pagerankInt(edges: DataFrame, iters: Int = 3,
-                  truncateEvery: Int = TruncateEvery,
-                  releaseInputs: Boolean = false): DataFrame = {
-    require(iters >= 1, s"pagerankInt: iters must be >= 1, got $iters")
-    require(truncateEvery >= 1,
-      s"pagerankInt: truncateEvery must be >= 1, got $truncateEvery")
-    // edges feed both the degree agg and the join frame — persist first
-    // so the (possibly corpus-derived) edge subtree materializes once
-    val e0 = edges.select(col("src"), col("dst")).persist(StorageLevel.DISK_ONLY)
-    val deg = e0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val ed = e0.join(deg, "src").persist(StorageLevel.DISK_ONLY)
-    val nodes = deg.select(col("src").as("n")).persist(StorageLevel.DISK_ONLY)
-    var pr = nodes.select(col("n"), lit(PrScale).as("pr"))
-    for (i <- 1 to iters) {
-      val contribs = ed
-        .join(pr.withColumnRenamed("n", "src"), "src")
-        .select(col("dst"), expr("pr div deg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        .withColumnRenamed("dst", "n")
-      val next = nodes.join(contribs, Seq("n"), "left")
-        .select(col("n"),
-          (lit(150000L) +
-            expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("pr"))
-      // the final round is forced eager ONLY when the caller wants the
-      // inputs released (their blocks must not be reachable from the
-      // returned lineage); otherwise it stays lazy and the consumer's
-      // own action computes it — one fewer whole job per call (r6)
-      pr = if (i % truncateEvery == 0 || (i == iters && releaseInputs))
-        ConnectedComponents.materializeRound(next) else next
-    }
-    if (releaseInputs) Seq(e0, ed, nodes).foreach(_.unpersist(blocking = false))
-    pr
-  }
-
   /** Edge-share precision for [[pagerankIntW]]: each out-edge's share
     * of its source's rank, in parts per million. */
   val ShareScale = 1000000L
 
-  /** WEIGHTED fixed-point integer PageRank over (src, dst, weight):
-    * rank flows along edges proportionally to edge weight instead of
-    * uniformly. Shares are pre-normalized ONCE on the persisted edge
-    * frame as integer millionths — share = (weight·10^6) div Σ_out
-    * weight — so the per-iteration contribution is
-    * (rank·share) div 10^6: pure BIGINT arithmetic, bit-exact across
-    * engines like [[pagerankInt]], and mass-conserving (Σ shares ≤
-    * 10^6 per node under integral division). On a co-mention graph
-    * this is the natural variant: an entity's rank should flow mostly
-    * to the neighbors it actually shares documents with, not equally
-    * to a rare co-occurrence. Same iteration/truncation structure as
-    * the unweighted form.
+  /** Lineage-truncation cadence of the distributed PageRank loop (r6):
+    * rounds between [[ConnectedComponents.materializeRound]] calls, each
+    * a whole eager job. Bounded plan depth needs only a bounded cadence;
+    * 2 measured best at sf0.1/local[32] (cadence 1 → 1.84 s, 2 → 1.58 s,
+    * 4 → 1.80 s, in-process best-of-3). */
+  val TruncateEvery = 2
+
+  /** Fixed-point integer PageRank over directed edges (src, dst):
+    * rank_0 = 10^6; rank_{k+1}(n) = 0.15·10^6 + 0.85·Σ_{(m,n)∈E}
+    * (rank_k(m) div outdeg(m)), all in BIGINT arithmetic (div =
+    * integral division), so every engine and every reduction order
+    * produces the same integers. Nodes = distinct edge sources;
+    * duplicate edge rows count in the out-degree; contributions to a
+    * dst that is not a source are dropped.
     *
-    * Overflow bound: rank·share ≤ rank·10^6, so ranks stay safe while
-    * max rank < 2^63/10^6 ≈ 9.2·10^12 — i.e. unless a single entity
-    * concentrates ~10^7× the average mass; ANSI mode throws loudly
-    * past that. */
-  def pagerankIntW(edges: DataFrame, iters: Int = 3,
-                   truncateEvery: Int = TruncateEvery,
-                   releaseInputs: Boolean = false): DataFrame = {
-    require(iters >= 1, s"pagerankIntW: iters must be >= 1, got $iters")
-    require(truncateEvery >= 1,
-      s"pagerankIntW: truncateEvery must be >= 1, got $truncateEvery")
-    val e0 = edges.select(col("src"), col("dst"), col("weight"))
-      .persist(StorageLevel.DISK_ONLY)
-    val sw = e0.groupBy(col("src")).agg(sum(col("weight")).as("sw"))
-    val ed = e0.join(sw, "src")
-      .select(col("src"), col("dst"),
-        expr(s"(weight * $ShareScale) div sw").as("share"))
-      .persist(StorageLevel.DISK_ONLY)
-    val nodes = sw.select(col("src").as("n")).persist(StorageLevel.DISK_ONLY)
-    var pr = nodes.select(col("n"), lit(PrScale).as("pr"))
-    for (i <- 1 to iters) {
-      val contribs = ed
-        .join(pr.withColumnRenamed("n", "src"), "src")
-        .select(col("dst"), expr(s"(pr * share) div $ShareScale").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        .withColumnRenamed("dst", "n")
-      val next = nodes.join(contribs, Seq("n"), "left")
-        .select(col("n"),
-          (lit(150000L) +
-            expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("pr"))
-      // see pagerankInt: final round forced eager only for releaseInputs
-      pr = if (i % truncateEvery == 0 || (i == iters && releaseInputs))
-        ConnectedComponents.materializeRound(next) else next
+    * Driver-local gate: the edges are taken in ONE job,
+    * `limit(localThreshold + 1)`. At most `localThreshold` rows (default
+    * [[ConnectedComponents.LocalEdgeThreshold]]) with string or integral
+    * ids, integral weights, no nulls and ANSI mode on are ranked on the
+    * driver into a local relation; anything else runs the distributed
+    * loop. The local path is bit-exact by construction: it evaluates the
+    * same BIGINT expressions in the same integral types, Java's `/`
+    * truncates like `div`, `Math.addExact`/`multiplyExact` throw where
+    * ANSI's checked arithmetic does, integer sums do not depend on their
+    * order, and Java equality on strings and boxed integrals is Spark's
+    * grouping and join equality on those types.
+    *
+    * Distributed loop: edge frames persist once (DISK_ONLY); rank
+    * lineage is truncated every [[TruncateEvery]] rounds and, under
+    * `releaseInputs` (ADVICE r5, [[Pipeline.runAnalytics]]), at the
+    * final round, after which the edge frames are unpersisted. The
+    * default keeps them for repeat ad-hoc calls to dedupe by plan.
+    *
+    * Overflow bound: total mass is conserved, so every rank ≤
+    * nodes·10^6 and 85·Σ stays under 2^63 up to ~10^11 nodes; beyond
+    * that the checked multiply throws rather than corrupting ranks. */
+  def pagerankInt(edges: DataFrame, iters: Int = 3, releaseInputs: Boolean = false,
+                  localThreshold: Long = ConnectedComponents.LocalEdgeThreshold): DataFrame =
+    pagerank(edges, iters, releaseInputs, localThreshold, weighted = false)
+
+  /** WEIGHTED fixed-point integer PageRank over (src, dst, weight): an
+    * entity's rank flows to its neighbors in proportion to the docs they
+    * share. Shares are normalized once as integer millionths — share =
+    * (weight·10^6) div Σ_out weight — and the contribution is
+    * (rank·share) div 10^6: BIGINT arithmetic, mass-conserving, with the
+    * gate and loop of [[pagerankInt]]. Ranks stay safe while max rank <
+    * 2^63/10^6 ≈ 9.2·10^12; the checked multiply throws past that. */
+  def pagerankIntW(edges: DataFrame, iters: Int = 3, releaseInputs: Boolean = false,
+                   localThreshold: Long = ConnectedComponents.LocalEdgeThreshold): DataFrame =
+    pagerank(edges, iters, releaseInputs, localThreshold, weighted = true)
+
+  /** The one PageRank kernel. Each edge carries a factor k: its source's
+    * out-degree (contribution pr div k) or, weighted, its share of the
+    * source's out-weight in millionths (contribution (pr·k) div 10^6). */
+  private def pagerank(edges: DataFrame, iters: Int, releaseInputs: Boolean,
+                       localThreshold: Long, weighted: Boolean): DataFrame = {
+    require(iters >= 1, s"pagerank: iters must be >= 1, got $iters")
+    val e = edges.select((Seq("src", "dst") ++ Option.when(weighted)("weight")).map(col): _*)
+    localEdges(e, localThreshold) match {
+      case Some(rows) => localRank(e, rows, iters, weighted)
+      case None =>
+        val (outMass, k, contrib) =
+          if (weighted) (sum(col("weight")), expr(s"(weight * $ShareScale) div out"),
+            expr(s"(pr * k) div $ShareScale"))
+          else (count(lit(1)), col("out"), expr("pr div k"))
+        // edges feed both the out-mass agg and the join frame — persist
+        // first so the (possibly corpus-derived) edge subtree runs once
+        val e0 = e.persist(StorageLevel.DISK_ONLY)
+        val out = e0.groupBy(col("src")).agg(outMass.as("out"))
+        val ed = e0.join(out, "src").select(col("src"), col("dst"), k.as("k"))
+          .persist(StorageLevel.DISK_ONLY)
+        val nodes = out.select(col("src").as("n")).persist(StorageLevel.DISK_ONLY)
+        var pr = nodes.select(col("n"), lit(PrScale).as("pr"))
+        for (i <- 1 to iters) {
+          val contribs = ed.join(pr.withColumnRenamed("n", "src"), "src")
+            .select(col("dst"), contrib.as("c"))
+            .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+            .withColumnRenamed("dst", "n")
+          val next = nodes.join(contribs, Seq("n"), "left")
+            .select(col("n"), (lit(150000L) +
+              expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("pr"))
+          pr = if (i % TruncateEvery == 0 || (i == iters && releaseInputs))
+            ConnectedComponents.materializeRound(next) else next
+        }
+        if (releaseInputs) Seq(e0, ed, nodes).foreach(_.unpersist(blocking = false))
+        pr
     }
-    if (releaseInputs) Seq(e0, ed, nodes).foreach(_.unpersist(blocking = false))
-    pr
+  }
+
+  /** The edge rows, if the driver can mirror Spark's arithmetic and
+    * equality on them exactly (see [[pagerankInt]]); None otherwise. */
+  private def localEdges(e: DataFrame, threshold: Long): Option[Array[Row]] = {
+    val Seq(srcT, dstT, weightT @ _*) = e.schema.fields.map(_.dataType).toSeq
+    def integral(t: DataType) = Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
+    if (threshold < 0 || srcT != dstT || !(srcT == StringType || integral(srcT)) ||
+        !weightT.forall(integral) ||
+        !e.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean) return None
+    val rows = e.limit((threshold.min(Int.MaxValue - 1L) + 1).toInt).collect()
+    Option.when(rows.length <= threshold && !rows.exists(_.anyNull))(rows)
+  }
+
+  /** [[pagerank]] on the driver, over the collected edge rows. */
+  private def localRank(e: DataFrame, rows: Array[Row], iters: Int,
+                        weighted: Boolean): DataFrame = {
+    val out = mutable.HashMap.empty[Any, Long]
+    rows.foreach(r => out(r.get(0)) = Math.addExact(out.getOrElse(r.get(0), 0L),
+      if (weighted) r.getAs[Number](2).longValue else 1L))
+    // Spark types `weight * 1000000` as INT for byte/short/int weights
+    val intWeight = weighted && e.schema(2).dataType != LongType
+    val ed = rows.map(r => (r.get(0), r.get(1), out(r.get(0)) match {
+      case o if !weighted => o
+      case o if intWeight => Math.multiplyExact(r.getAs[Number](2).intValue, ShareScale.toInt) / o
+      case o => Math.multiplyExact(r.getLong(2), ShareScale) / o
+    }))
+    var pr = out.map { case (n, _) => n -> PrScale }
+    for (_ <- 1 to iters) {
+      // sums run over every dst, as Spark's aggregate does before the
+      // nodes' left join drops the dsts that are not sources
+      val s = mutable.HashMap.empty[Any, Long]
+      for ((src, dst, k) <- ed) s(dst) = Math.addExact(s.getOrElse(dst, 0L),
+        if (weighted) Math.multiplyExact(pr(src), k) / ShareScale else pr(src) / k)
+      pr = out.map { case (n, _) =>
+        n -> Math.addExact(150000L, Math.multiplyExact(85L, s.getOrElse(n, 0L)) / 100) }
+    }
+    val src = e.schema(0)
+    e.sparkSession.createDataFrame(pr.toSeq.map { case (n, r) => Row(n, r) }.asJava,
+      StructType(Seq(StructField("n", src.dataType, src.nullable),
+        StructField("pr", LongType, nullable = true))))
   }
 
   /** Triangle census of the MUTUAL top-k graph: an undirected edge

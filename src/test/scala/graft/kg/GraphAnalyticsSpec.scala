@@ -1,6 +1,8 @@
 package graft.kg
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -158,6 +160,96 @@ class GraphAnalyticsSpec extends SparkSuite {
     val e = edges(("A", "B"))
     intercept[IllegalArgumentException] {
       GraphAnalytics.pagerankInt(e, iters = 0)
+    }
+  }
+
+  private def ranks(df: DataFrame): Seq[(Any, Long)] =
+    df.collect().map(r => (r.get(0), r.getLong(1))).toSeq.sortBy(_._1.toString)
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec]
+
+  /** Seeded random (src, dst, weight) rows: cubed-uniform source pick
+    * (skewed out-degree), dsts drawn past the source range (never
+    * sources), a duplicated edge, and a source nothing points at. */
+  private def randomEdges(seed: Int): Seq[(Long, Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val nSrc = 4 + rnd.nextInt(40)
+    val body = Seq.fill(8 + rnd.nextInt(200))((
+      (nSrc * math.pow(rnd.nextDouble(), 3)).toLong,
+      rnd.nextInt(nSrc + 6).toLong,
+      1L + rnd.nextInt(50)))
+    body ++ body.take(1) :+ ((nSrc + 100L, 0L, 3L))
+  }
+
+  test("pagerankInt/W: driver-local path is bit-identical to the distributed loop") {
+    import spark.implicits._
+    for (seed <- 0 until 8) {
+      val rows = randomEdges(seed)
+      val iters = 1 + seed % 5
+      val df = seed % 4 match {
+        case 0 => rows.map { case (s, d, w) => (s"é$s", s"é$d", w) }.toDF("src", "dst", "weight")
+        case 1 => rows.toDF("src", "dst", "weight")
+        case 2 => rows.map { case (s, d, w) => (s"v$s", s"v$d", w.toInt) }.toDF("src", "dst", "weight")
+        case _ => rows.map { case (s, d, w) => (s, d, w.toInt) }.toDF("src", "dst", "weight")
+      }
+      for ((name, rank) <- Seq[(String, Long => DataFrame)](
+             "pagerankInt" -> (t => GraphAnalytics.pagerankInt(df, iters, localThreshold = t)),
+             "pagerankIntW" -> (t => GraphAnalytics.pagerankIntW(df, iters, localThreshold = t)))) {
+        val local = rank(ConnectedComponents.LocalEdgeThreshold)
+        val dist = rank(0L)
+        val ctx = s"$name seed=$seed iters=$iters ${df.schema.simpleString}"
+        assert(isLocal(local) && !isLocal(dist), ctx)
+        assert(local.schema == dist.schema, ctx)
+        assert(ranks(local) == ranks(dist) && ranks(local).nonEmpty, ctx)
+      }
+    }
+  }
+
+  test("pagerankInt/W: edge sets the driver cannot mirror take the distributed loop") {
+    import spark.implicits._
+    val star = edges(("C", "L1"), ("C", "L2"), ("C", "L3"),
+      ("L1", "C"), ("L2", "C"), ("L3", "C"))
+    // over a tiny threshold: the hand-computed mutual-star ranks above
+    val over = GraphAnalytics.pagerankInt(star, iters = 2, localThreshold = 3)
+    assert(!isLocal(over))
+    assert(ranks(over) == Seq("C" -> 1254999L, "L1" -> 915000L, "L2" -> 915000L,
+      "L3" -> 915000L))
+    // null endpoints: a null-src edge joins nothing (its node keeps the
+    // base), a null dst still counts in deg(D) but its share is dropped
+    val nulls = edges(("A", "B"), ("B", "A"), ("D", "A"), ("D", null), (null, "A"))
+    val nr = GraphAnalytics.pagerankInt(nulls, iters = 1)
+    assert(!isLocal(nr))
+    assert(nr.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
+      Set(("A", 1425000L), ("B", 1000000L), ("D", 150000L), (null, 150000L)))
+    // ids whose JVM equality is not Spark's: double and binary
+    val want = Seq(1850000L, 1000000L, 150000L)
+    val dbl = GraphAnalytics.pagerankInt(
+      Seq((1.0, 2.0), (2.0, 1.0), (3.0, 1.0)).toDF("src", "dst"), iters = 1)
+    assert(!isLocal(dbl) && ranks(dbl).map(_._2) == want)
+    val bin = GraphAnalytics.pagerankInt(Seq(("a", "b"), ("b", "a"), ("d", "a"))
+      .map { case (s, d) => (s.getBytes, d.getBytes) }.toDF("src", "dst"), iters = 1)
+    assert(!isLocal(bin))
+    assert(bin.collect().map(r => r.getAs[Array[Byte]](0).toSeq -> r.getLong(1)).toMap ==
+      Map("a".getBytes.toSeq -> want(0), "b".getBytes.toSeq -> want(1),
+        "d".getBytes.toSeq -> want(2)))
+    // double weights: `div` rejects them at analysis, as it always has
+    val dw = Seq(("C", "L1", 2.0), ("L1", "C", 2.0)).toDF("src", "dst", "weight")
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      GraphAnalytics.pagerankIntW(dw, iters = 1))
+    assert(err.getCondition.startsWith("DATATYPE_MISMATCH"), err.getMessage)
+  }
+
+  test("pagerankIntW: INT-typed weight·10^6 overflow throws on both paths") {
+    // Spark types `weight * 1000000` as INT for an int weight column, so
+    // 3000·10^6 overflows under ANSI; the driver must throw there too
+    import spark.implicits._
+    val e = Seq(("A", "B", 3000), ("B", "A", 1)).toDF("src", "dst", "weight")
+    for (t <- Seq(ConnectedComponents.LocalEdgeThreshold, 0L)) {
+      val err = intercept[Exception](
+        GraphAnalytics.pagerankIntW(e, iters = 1, localThreshold = t).collect())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), s"threshold $t: $err")
     }
   }
 

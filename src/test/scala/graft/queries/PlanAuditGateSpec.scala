@@ -1,6 +1,12 @@
 package graft.queries
 
+import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSuite
+import graft.kg.{GraphAnalytics, Stages}
 
 /** PlanAudit as a regression GATE, not a dump (VERDICT r5 #6): the
   * named expectations in graft.PlanAudit's comment block, asserted
@@ -12,7 +18,7 @@ import graft.SparkSuite
   * joins) — this spec covers the REST of the audited list, and the
   * completeness test at the bottom fails if a key is added to
   * PlanAudit.Audited without a predicate in either spec. */
-class PlanAuditGateSpec extends SparkSuite {
+class PlanAuditGateSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -86,11 +92,20 @@ class PlanAuditGateSpec extends SparkSuite {
     assert(p.contains("BroadcastHashJoin"), p.take(900))
   }
 
+  test("graph_pagerank: dictionary-sized graph ranks on the driver, zero shuffles") {
+    val p = graft.SparkEntry.queries("graph_pagerank")(spark, sf).queryExecution.executedPlan
+    assert(collect(p) { case s: LocalTableScanExec => s }.nonEmpty, p.treeString)
+    assert(collect(p) { case s: ShuffleExchangeExec => s }.isEmpty, p.treeString)
+  }
+
   test("graph_pagerank: ranks read from the round-truncated checkpoint") {
-    val p = plan("graph_pagerank")
-    // the returned frame is the materialized final round — an RDD scan,
-    // not a re-derivation of the whole iterative lineage
-    assert(p.contains("Scan ExistingRDD"), p.take(900))
+    // forced distributed (localThreshold = 0): the returned frame is built
+    // on the materialized round — an RDD scan, not a re-derivation of the
+    // whole iterative lineage
+    val edges = GraphAnalytics.comentionTopK(
+      Stages.triples(spark, sf).where(col("pred") === "mentionedIn"))
+    val p = GraphAnalytics.pagerankInt(edges, localThreshold = 0).queryExecution.executedPlan
+    assert(collect(p) { case s: RDDScanExec => s }.nonEmpty, p.treeString.take(1500))
   }
 
   test("graph_triangles: mutual-edge cache reused across the enumeration legs") {
