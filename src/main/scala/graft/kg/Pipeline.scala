@@ -22,6 +22,14 @@ import graft.sources.SnapshotStore
   * stages are dictionary-sized or aggregate-sized and re-derive
   * cheaply, each behind its own marker.
   *
+  * A resume does only the missing work: one marker listing per run
+  * decides every stage, the gazetteer is derived only when a stage that
+  * consumes it (mentions, links, canonical) is missing, and a committed
+  * stage is read back only when a missing stage downstream needs it.
+  * Snapshot reads take their schema from the manifest, so a no-op
+  * resume starts no Spark job. A concurrent writer stays safe: commit
+  * re-checks its marker under the store's lock.
+  *
   * `bucketsPerScan` is the retry-unit knob: at the 10^12-doc design
   * point you bound how much work one commit can lose by processing
   * the missing buckets in groups (each group = one filtered scan +
@@ -46,7 +54,7 @@ object Pipeline {
     def corpus(): DataFrame =
       corpusPath.map(spark.read.parquet(_)).getOrElse(Corpus.docs(spark, sfDir))
 
-    val gazSeq = Stages.gazetteer(spark, sfDir)
+    lazy val gazSeq = Stages.gazetteer(spark, sfDir)
       .select(col("surface"), col("coarse_type"))
       .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
 
@@ -71,14 +79,13 @@ object Pipeline {
         statsCol = Some("doc_id")) // per-bucket source doc_id ranges in lineage
     }
 
-    val mentions = store.read(spark, stage = Some("mentions"))
-      .select(col("doc_id"), col("span_idx"), col("surface"),
-        col("coarse_type"), col("n_occ"), col(Engine.AdjMedia))
-
     // Stage 2+3: candidates + link scoring (dictionary joins + argmax);
     // adjacency threads through both so the triple stage needs only
     // this snapshot.
-    if (!store.markers().contains("links")) {
+    if (!done.contains("links")) {
+      val mentions = store.read(spark, stage = Some("mentions"))
+        .select(col("doc_id"), col("span_idx"), col("surface"),
+          col("coarse_type"), col("n_occ"), col(Engine.AdjMedia))
       // anchorDictLocal: the gazetteer seq collected above serves the
       // dictionary too — no second gazetteer job (r6)
       val links = Engine.links(
@@ -87,27 +94,26 @@ object Pipeline {
         Stages.scoreBoost, carry)
       store.commit(links, stage = "links", marker = "links")
     }
-    val links = store.read(spark, stage = Some("links"))
 
     // Stage 4: canonicalization (CC over the alias graph).
-    if (!store.markers().contains("canonical")) {
+    if (!done.contains("canonical")) {
       store.commit(Engine.canonical(
         Stages.aliasEdgesLocal(spark, gazSeq.map(_._1))),
         stage = "canonical", marker = "canonical")
     }
-    val canon = store.read(spark, stage = Some("canonical"))
 
     // Stage 5: triple emit, partitioned by predicate for pruned reads.
     // The canonical map's exact row count is free from its snapshot
     // manifest — it size-gates the broadcast inside Engine.triples.
     // depictedIn inputs ride the link rows (adj_media) — neither the
     // corpus nor the mention snapshot is touched again.
-    if (!store.markers().contains("triples")) {
+    if (!done.contains("triples")) {
       // liveManifests: after a compaction of the canonical stage the
       // raw list would double-count rows and mis-gate the broadcast
       val canonRows = store.liveManifests()
         .filter(_.stage == "canonical").map(_.rows).sum
-      val triples = Engine.triples(links, canon, Some(canonRows))
+      val triples = Engine.triples(store.read(spark, stage = Some("links")),
+        store.read(spark, stage = Some("canonical")), Some(canonRows))
       store.commit(triples, stage = "triples", marker = "triples",
         partitionBy = Seq("pred"))
     }
@@ -120,7 +126,8 @@ object Pipeline {
     * UPSTREAM state it derives from (marker = `<stage>-upto-<latest
     * live triples snapshot id>`) and `replaces` the previous
     * derivation:
-    *  - rerun over unchanged triples → marker hit, no-op (resume);
+    *  - rerun over unchanged triples → marker hit, no-op (resume):
+    *    nothing is read or derived, so it starts no Spark job;
     *  - rerun after new triple snapshots landed (a streaming sink, a
     *    later pipeline run) → recompute + supersede, so latest reads
     *    serve ONE fresh snapshot, never a stale∪fresh union;
@@ -138,26 +145,30 @@ object Pipeline {
       .maxOption.getOrElse(throw new IllegalStateException(
         "runAnalytics needs a committed 'triples' stage — run the pipeline first"))
     def triples() = store.read(spark, stage = Some("triples"))
-    def refresh(stage: String)(df: => DataFrame): Unit = {
+    val done = store.markers()
+    // `build` runs only on a marker miss, so a no-op refresh reads and
+    // derives nothing; its release handle runs once the commit is done
+    def refresh(stage: String)(build: => (DataFrame, () => Unit)): Unit = {
       val marker = s"$stage-upto-$upTo"
-      if (!store.markers().contains(marker)) {
+      if (!done.contains(marker)) {
         val prior = store.liveManifests().filter(_.stage == stage).map(_.id)
-        store.commit(df, stage, marker, replaces = prior): Unit
+        val (df, release) = build
+        try store.commit(df, stage, marker, replaces = prior): Unit
+        finally release()
       }
     }
-    refresh("graph_degree")(GraphAnalytics.degrees(triples()))
+    val noRelease = () => ()
+    refresh("graph_degree")(GraphAnalytics.degrees(triples()) -> noRelease)
     // WithRelease: the pair intermediate's DISK_ONLY blocks are dropped
     // once the co-mention stage is committed — a long-lived driver
     // refreshing analytics per triple version no longer accumulates
     // cache entries across refreshes (ADVICE r5). PageRank reads the
     // COMMITTED co-mention stage, so the release cannot starve it.
-    val (com, releaseComention) = GraphAnalytics.comentionTopKWithRelease(
-      triples().where(col("pred") === "mentionedIn"))
-    refresh("graph_comention")(com)
-    releaseComention()
+    refresh("graph_comention")(GraphAnalytics.comentionTopKWithRelease(
+      triples().where(col("pred") === "mentionedIn")))
     refresh("graph_pagerank")(
       GraphAnalytics.pagerankInt(store.read(spark, stage = Some("graph_comention")),
-        releaseInputs = true))
+        releaseInputs = true) -> noRelease)
     store
   }
 

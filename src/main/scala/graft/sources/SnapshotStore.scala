@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Thin snapshot/lineage store emulating the Iceberg table semantics the
   * contract uses (SURVEY.md §7.4: no Iceberg runtime exists in this
@@ -16,7 +16,21 @@ import org.apache.spark.sql.types.StructType
   * Layout:
   *   root/data/snap-<id>/         parquet of commit <id>
   *   root/_snapshots/<id>.json    manifest: data dir, stage, marker,
-  *                                metrics, wall_ms (atomic rename commit)
+  *                                metrics, wall_ms, schema (atomic
+  *                                rename commit)
+  *
+  * `schema` is the snapshot's DATA schema as compact DDL
+  * (`StructType.toDDL`): the committed columns minus the partition,
+  * hidden and bucket columns, every level nullable. It is recorded only
+  * when `StructType.fromDDL` gives back exactly that schema, else it is
+  * empty. A read with no caller schema and no `evolveSchema`, whose
+  * selected manifests all record the same non-empty DDL, hands it to
+  * the parquet reader — Iceberg keeps the schema in table metadata for
+  * the same reason: planning a read opens no data file and starts no
+  * Spark job. Partition columns stay out of it, so Spark still infers
+  * their types from the directory names. Every other read (manifests
+  * without a schema, mixed schemas, `evolveSchema`) infers from the
+  * parquet footers.
   *
   * Commit protocol: write parquet → write manifest to a temp file →
   * `Files.move(..., ATOMIC_MOVE)`. A reader only sees fully-committed
@@ -82,6 +96,8 @@ final class SnapshotStore private (rootStr: String) {
     * ledger — replaying an already-compacted `foreachBatch` batch id
     * must remain a no-op, or compaction would re-open the door to
     * duplicate appends. Empty for ordinary commits. */
+  /** `schema` = the data schema's DDL, or "" (see the layout note on
+    * [[SnapshotStore]]). */
   final case class Manifest(id: Long, dir: String, stage: String, marker: String,
                             rows: Long, wallMs: Long,
                             metrics: Map[String, Long] = Map.empty,
@@ -89,7 +105,8 @@ final class SnapshotStore private (rootStr: String) {
                             parts: Seq[String] = Nil,
                             files: Seq[String] = Nil,
                             hiddenExprs: Seq[String] = Nil,
-                            replaces: Seq[Long] = Nil)
+                            replaces: Seq[Long] = Nil,
+                            schema: String = "")
 
   private def q(s: String): String =
     "\"" + s.flatMap {
@@ -97,63 +114,77 @@ final class SnapshotStore private (rootStr: String) {
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     } + "\""
 
+  /** Empty arrays, an empty metrics map and an empty schema are left
+    * out: the parser reads a missing key as empty, and most manifests
+    * record no layout at all. */
   private def render(m: Manifest): String = {
-    val met = m.metrics.toSeq.sorted
-      .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val hid = m.hidden.map(q).mkString("[", ",", "]")
-    val hex = m.hiddenExprs.map(q).mkString("[", ",", "]")
-    val pts = m.parts.map(q).mkString("[", ",", "]")
-    val fls = m.files.map(q).mkString("[", ",", "]")
-    val rpl = m.replaces.mkString("[", ",", "]")
-    s"""{"id":${m.id},"dir":${q(m.dir)},"stage":${q(m.stage)},"marker":${q(m.marker)},"rows":${m.rows},"wall_ms":${m.wallMs},"hidden":$hid,"hidden_exprs":$hex,"parts":$pts,"files":$fls,"replaces":$rpl,"metrics":$met}"""
+    def arr(key: String, vs: Seq[String]) =
+      if (vs.isEmpty) "" else vs.mkString(s",${q(key)}:[", ",", "]")
+    val met = m.metrics.toSeq.sorted.map { case (k, v) => s"${q(k)}:$v" }
+    s"""{"id":${m.id},"dir":${q(m.dir)},"stage":${q(m.stage)},"marker":${q(m.marker)},"rows":${m.rows},"wall_ms":${m.wallMs}""" +
+      (if (m.schema.isEmpty) "" else s""","schema":${q(m.schema)}""") +
+      arr("hidden", m.hidden.map(q)) + arr("hidden_exprs", m.hiddenExprs.map(q)) +
+      arr("parts", m.parts.map(q)) + arr("files", m.files.map(q)) +
+      arr("replaces", m.replaces.map(_.toString)) +
+      (if (met.isEmpty) "" else met.mkString(""","metrics":{""", ",", "}")) + "}"
   }
 
   private val strRe = """"((?:[^"\\]|\\.)*)"""".r
 
-  /** Body of the JSON string-array at `key`, found with a quote-aware
-    * scan — a regex bounded by the first ']' would truncate on a ']'
-    * INSIDE a recorded path (e.g. a store root named `run[2026]`),
-    * silently dropping the tail of a file list. The key TAG is located
-    * with the same quote-aware machine (ADVICE r4): [[q]] escapes every
-    * quote so a rendered string cannot actually contain the tag bytes,
-    * but the parser should not depend on the renderer's escaping
-    * invariant at a distance — a tag match inside a marker string
-    * would silently corrupt that snapshot's file list. */
-  private def arrayBody(js: String, key: String): Option[String] = {
-    val tag = "\"" + key + "\":["
-    var scan = 0; var inStr = false; var start = -1
-    while (scan < js.length && start < 0) {
-      val c = js.charAt(scan)
+  /** Index just past `"key":` among the manifest's TOP-LEVEL keys,
+    * found with a quote- and depth-aware scan: tag bytes inside a
+    * string (a marker, a path) or inside the nested metrics map are
+    * never taken for the key. [[q]] escapes every quote, so a rendered
+    * string cannot contain the tag anyway, but the parser should not
+    * depend on the renderer's escaping invariant at a distance
+    * (ADVICE r4). */
+  private def valueAt(js: String, key: String): Option[Int] = {
+    val tag = "\"" + key + "\":"
+    var i = 0; var depth = 0; var inStr = false
+    while (i < js.length) {
+      val c = js.charAt(i)
       if (inStr) {
-        if (c == '\\') scan += 1
+        if (c == '\\') i += 1
         else if (c == '"') inStr = false
       } else if (c == '"') {
-        if (js.startsWith(tag, scan)) start = scan else inStr = true
-      }
-      scan += 1
+        if (depth == 1 && js.startsWith(tag, i)) return Some(i + tag.length)
+        inStr = true
+      } else if (c == '{' || c == '[') depth += 1
+      else if (c == '}' || c == ']') depth -= 1
+      i += 1
     }
-    if (start < 0) return None
-    val from = start + tag.length
-    var i = from
-    inStr = false
+    None
+  }
+
+  /** Body of the JSON array or object at `key`, up to its closing
+    * bracket found with a quote-aware scan — a regex bounded by the
+    * first ']' would truncate on a ']' INSIDE a recorded path (e.g. a
+    * store root named `run[2026]`), silently dropping the tail of a
+    * file list. */
+  private def containerBody(js: String, key: String, open: Char, close: Char): Option[String] = {
+    val at = valueAt(js, key).filter(p => p < js.length && js.charAt(p) == open)
+      .getOrElse(return None)
+    val from = at + 1
+    var i = from; var inStr = false
     while (i < js.length) {
       val c = js.charAt(i)
       if (inStr) {
         if (c == '\\') i += 1
         else if (c == '"') inStr = false
       } else if (c == '"') inStr = true
-      else if (c == ']') return Some(js.substring(from, i))
+      else if (c == close) return Some(js.substring(from, i))
       i += 1
     }
     None
   }
 
-  /** Inverse of [[q]] for the captured group of [[strRe]]/[[kvRe]] —
-    * without it a name containing a quote or backslash reads back
-    * still-escaped and then fails to match the real column (ADVICE
-    * r3). Belt-and-braces: [[commit]] also rejects hidden names
-    * outside a safe identifier alphabet, so escapes never actually
-    * occur in hidden entries. */
+  /** Inverse of [[q]] for every string the parser reads — without it a
+    * name containing a quote or backslash reads back still-escaped and
+    * then fails to match the real column (ADVICE r3), and a marker
+    * containing a control character reads back as `u00XX` text, so
+    * [[markers]] misses it and a replay commits the same data twice.
+    * Belt-and-braces: [[commit]] also rejects hidden names outside a
+    * safe identifier alphabet, so escapes never occur in hidden entries. */
   private def unescape(s: String): String = {
     val sb = new StringBuilder; var i = 0
     while (i < s.length) {
@@ -170,49 +201,40 @@ final class SnapshotStore private (rootStr: String) {
   }
 
   private def parseStrArray(js: String, key: String): Seq[String] =
-    arrayBody(js, key).toSeq.flatMap(b =>
+    containerBody(js, key, '[', ']').toSeq.flatMap(b =>
       strRe.findAllMatchIn(b).map(g => unescape(g.group(1))).toSeq)
-
-  private def parseHidden(js: String): Seq[String] = parseStrArray(js, "hidden")
-  private def parseParts(js: String): Seq[String] = parseStrArray(js, "parts")
-  private def parseFiles(js: String): Seq[String] = parseStrArray(js, "files")
 
   private val longRe = """-?\d+""".r
   /** Number-array field; absent (pre-compaction manifests) = empty. */
   private def parseLongArray(js: String, key: String): Seq[Long] =
-    arrayBody(js, key).toSeq.flatMap(b =>
+    containerBody(js, key, '[', ']').toSeq.flatMap(b =>
       longRe.findAllIn(b).map(_.toLong).toSeq)
 
-  private val metricsRe = """"metrics":\{([^}]*)\}""".r
   private val kvRe = """"((?:[^"\\]|\\.)*)":(-?\d+)""".r
 
   private def parseMetrics(js: String): Map[String, Long] =
-    metricsRe.findFirstMatchIn(js).map { m =>
-      kvRe.findAllMatchIn(m.group(1))
+    containerBody(js, "metrics", '{', '}').map { b =>
+      kvRe.findAllMatchIn(b)
         .map(kv => unescape(kv.group(1)) -> kv.group(2).toLong).toMap
     }.getOrElse(Map.empty)
 
-  private def field(js: String, name: String): String = {
-    val km = ("\"" + name + "\":").r.findFirstMatchIn(js).getOrElse(
+  /** A scalar field: a string (unescaped) or a number's digits. */
+  private def fieldOpt(js: String, name: String): Option[String] =
+    valueAt(js, name).map { p =>
+      if (js.charAt(p) == '"') unescape(strRe.findPrefixMatchOf(js.substring(p)).get.group(1))
+      else js.substring(p).takeWhile(c => c.isDigit || c == '-')
+    }
+
+  private def field(js: String, name: String): String =
+    fieldOpt(js, name).getOrElse(
       throw new IllegalStateException(s"manifest missing $name: $js"))
-    val rest = js.substring(km.end)
-    if (rest.startsWith("\"")) {
-      val sb = new StringBuilder; var i = 1
-      while (rest.charAt(i) != '"') {
-        if (rest.charAt(i) == '\\') { i += 1; sb.append(rest.charAt(i) match {
-          case 'n' => '\n'; case '"' => '"'; case '\\' => '\\'; case c => c }) }
-        else sb.append(rest.charAt(i))
-        i += 1
-      }
-      sb.toString
-    } else rest.takeWhile(c => c.isDigit || c == '-')
-  }
 
   private def parse(js: String): Manifest = Manifest(
     field(js, "id").toLong, field(js, "dir"), field(js, "stage"),
     field(js, "marker"), field(js, "rows").toLong, field(js, "wall_ms").toLong,
-    parseMetrics(js), parseHidden(js), parseParts(js), parseFiles(js),
-    parseStrArray(js, "hidden_exprs"), parseLongArray(js, "replaces"))
+    parseMetrics(js), parseStrArray(js, "hidden"), parseStrArray(js, "parts"),
+    parseStrArray(js, "files"), parseStrArray(js, "hidden_exprs"),
+    parseLongArray(js, "replaces"), fieldOpt(js, "schema").getOrElse(""))
 
   def manifests(): Seq[Manifest] = {
     // a cached instance (forRoot) can outlive its directories — e.g. a
@@ -358,6 +380,26 @@ final class SnapshotStore private (rootStr: String) {
       s"stage name '$stage' is reserved: the '${GraftCatalog.LayoutSuffix}' " +
         "suffix selects a stage's physical layout view on the SQL surface")
 
+  /** The `schema` a manifest records for `df` written with
+    * `layoutCols` as partition directories (see the layout note on
+    * [[SnapshotStore]]): "" when the DDL does not parse back to the
+    * same nullable schema — field metadata, UDTs — so such snapshots
+    * keep inferring. */
+  private def recordedSchema(df: DataFrame, layoutCols: Seq[String]): String = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case o => o
+    }
+    val data = StructType(df.schema
+      .filterNot(f => layoutCols.exists(_.equalsIgnoreCase(f.name)))
+      .map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    val ddl = data.toDDL
+    if (scala.util.Try(StructType.fromDDL(ddl)).toOption.contains(data)) ddl else ""
+  }
+
   /** Atomic append commit. Returns the snapshot id, or None when the
     * marker was already committed (idempotent replay). `partitionBy`
     * lays the snapshot out as hive-style partition dirs so downstream
@@ -489,7 +531,8 @@ final class SnapshotStore private (rootStr: String) {
     writeManifest(Manifest(id, finalDir, stage, marker, rows,
       (System.nanoTime() - t0) / 1000000L, metrics ++ statMetrics,
       hidden = hiddenPartitions.map(_._1), parts = partitionBy, files = files,
-      hiddenExprs = hiddenSql, replaces = replaces))
+      hiddenExprs = hiddenSql, replaces = replaces,
+      schema = recordedSchema(withHidden, partCols)))
     Some(id)
   }
 
@@ -672,6 +715,7 @@ final class SnapshotStore private (rootStr: String) {
       .parquet(dir.toString)
     val counts = obs.get
     val jobWallMs = (System.nanoTime() - t0) / 1000000L
+    val schema = recordedSchema(df, Seq(bucketCol))
     // one write JOB serves all buckets: each manifest carries its
     // per-bucket share (so summing wall across bucket manifests ≈ the
     // job wall, not N× it) plus the shared job wall and bucket count
@@ -688,7 +732,7 @@ final class SnapshotStore private (rootStr: String) {
         stage, markerFor(b), counts(s"rows_$b").asInstanceOf[Long],
         jobWallMs / todo.size,
         Map("bucket" -> b.toLong, "job_wall_ms" -> jobWallMs,
-          "job_buckets" -> todo.size.toLong) ++ stats))
+          "job_buckets" -> todo.size.toLong) ++ stats, schema = schema))
       id
     }
   }
@@ -767,8 +811,14 @@ final class SnapshotStore private (rootStr: String) {
   private def sourceFrames(spark: SparkSession, ms: Seq[Manifest],
                            schema: Option[StructType],
                            evolveSchema: Boolean): Seq[DataFrame] = {
+    // the schema every selected manifest recorded at commit spares the
+    // footer-inference job (see the layout note on [[SnapshotStore]])
+    val recorded = ms.map(_.schema).distinct match {
+      case Seq(ddl) if ddl.nonEmpty && !evolveSchema => Some(StructType.fromDDL(ddl))
+      case _ => None
+    }
     def reader() = {
-      val rd0 = schema.map(spark.read.schema).getOrElse(spark.read)
+      val rd0 = schema.orElse(recorded).map(spark.read.schema).getOrElse(spark.read)
       if (evolveSchema) rd0.option("mergeSchema", "true") else rd0
     }
     val (flatDirs, legacyDirs, fileGroups) = layoutGroups(ms)

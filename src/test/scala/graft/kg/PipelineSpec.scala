@@ -39,8 +39,30 @@ class PipelineSpec extends SparkSuite {
     }
 
     val nSnaps = store.manifests().size
-    val store2 = Pipeline.run(spark, sf, out) // resume on a complete run
-    assert(store2.manifests().size == nSnaps) // nothing recommitted
+    // resume on a complete run: nothing recommitted, and nothing derived
+    // or read either — no gazetteer, no schema inference, no job at all
+    val (store2, jobs) = jobsStarted(Pipeline.run(spark, sf, out))
+    assert(store2.manifests().size == nSnaps)
+    assert(jobs == 0, s"a no-op resume started $jobs Spark job(s)")
+  }
+
+  test("partial resume: committed mentions and links are kept, the rest recomputed") {
+    val out = Files.createTempDirectory("pipe-partial").toString
+    val store = Pipeline.run(spark, sf, out)
+    // the visible state of a run that died after committing links:
+    // drop the canonical and triples manifests, reclaim their data
+    val kept = store.manifests().filter(m => m.stage == "mentions" || m.stage == "links")
+    store.manifests().filterNot(kept.contains).foreach { m =>
+      Files.delete(java.nio.file.Paths.get(out, "_snapshots", s"${m.id}.json"))
+    }
+    store.vacuumOrphans()
+    assert(store.markers() == kept.map(_.marker).toSet)
+
+    val resumed = Pipeline.run(spark, sf, out)
+    assert(resumed.manifests().take(kept.size) == kept) // untouched
+    assert(resumed.manifests().map(_.stage).drop(kept.size) == Seq("canonical", "triples"))
+    val got = tripleSet(resumed.read(spark, stage = Some("triples")))
+    assert(got == tripleSet(Stages.triples(spark, sf)) && got.nonEmpty)
   }
 
   test("runAnalytics: committed graph stages == declarative analytics; resume is a no-op") {
@@ -61,10 +83,11 @@ class PipelineSpec extends SparkSuite {
       GraphAnalytics.degrees(Stages.triples(spark, sf)).count())
 
     // marker idempotence: a resumed analytics run over UNCHANGED
-    // triples recommits nothing
+    // triples recommits nothing, and reads nothing: no job at all
     val nSnaps = store.manifests().size
-    Pipeline.runAnalytics(spark, store)
+    val (_, jobs) = jobsStarted(Pipeline.runAnalytics(spark, store))
     assert(store.manifests().size == nSnaps)
+    assert(jobs == 0, s"a no-op runAnalytics started $jobs Spark job(s)")
 
     // incremental maintenance: a later batch lands more triples → the
     // derived stages REFRESH, each superseding its stale predecessor

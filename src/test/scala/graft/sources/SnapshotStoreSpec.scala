@@ -40,6 +40,121 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.manifests().size == 1)
   }
 
+  test("a marker with control characters round-trips; its replay is a no-op") {
+    import spark.implicits._
+    val (store, _) = freshStore()
+    val a = Seq((1L, "a")).toDF("k", "v")
+    assert(store.commit(a, "s", "b\t1").isDefined)
+    assert(store.markers() == Set("b\t1"))
+    assert(store.commit(a, "s", "b\t1").isEmpty) // replay
+    assert(store.read(spark).count() == 1)
+    // every field survives render → parse, escapes and brackets included
+    val m = store.Manifest(7L, "/x/run[2026]/d\"q\\", "st\n", "m\u0001}",
+      3L, 4L, Map("k\"}" -> -5L), Seq("h"), Seq("p"), Seq("/f]1", "/f,2"),
+      Seq("CAST(x AS INT)"), Seq(1L, 2L), "a BIGINT,`b]` STRING")
+    store.writeManifest(m)
+    assert(store.manifests().last == m)
+  }
+
+  /** Reads `stage` through the schema its manifests recorded, then
+    * through inference — the same manifests with `schema` stripped, as
+    * an older store wrote them. Both must serve the same schema (names,
+    * types, nullability, metadata) and rows, and planning the first
+    * must start no Spark job. */
+  private def assertRecordedSchemaServesInferred(store: SnapshotStore, stage: String,
+                                                 keepHidden: Boolean = false): Unit = {
+    val ms = store.manifests().filter(_.stage == stage)
+    assert(ms.nonEmpty && ms.forall(_.schema.nonEmpty), ms)
+    val (recorded, jobs) = jobsStarted(
+      store.read(spark, stage = Some(stage), keepHidden = keepHidden))
+    assert(jobs == 0, s"$stage: planning the read started $jobs job(s)")
+    ms.foreach(m => store.writeManifest(m.copy(schema = ""), replaceExisting = true))
+    val inferred = store.read(spark, stage = Some(stage), keepHidden = keepHidden)
+    assert(recorded.schema == inferred.schema,
+      s"$stage:\n${recorded.schema.treeString}\n${inferred.schema.treeString}")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    assert(rows(recorded) == rows(inferred) && rows(recorded).nonEmpty)
+    ms.foreach(m => store.writeManifest(m, replaceExisting = true))
+  }
+
+  test("reads take the schema from the manifest: same schema and rows as inference, no job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val (store, _) = freshStore()
+    // flat: nested array/struct/map columns, non-nullable primitives
+    // and containers, decimal and timestamp columns; two commits
+    def flat(k: Long) = Seq((k, Seq(1, 2), Map("a" -> k), (k.toInt, "s"),
+        java.sql.Timestamp.valueOf("2026-01-02 03:04:05"),
+        java.time.LocalDateTime.of(2026, 1, 2, 3, 4)))
+      .toDF("k", "arr", "m", "st", "ts", "ntz")
+      .withColumn("dec", lit("12.34").cast("decimal(10,2)"))
+      .withColumn("nested", array(struct(col("k"), map(lit("x"), col("arr")))))
+    assert(!flat(1L).schema("k").nullable)
+    store.commit(flat(1L), "flat", "f1")
+    store.commit(flat(2L), "flat", "f2")
+    assertRecordedSchemaServesInferred(store, "flat")
+
+    // commitBuckets, bucket 2 empty: the bucket column stays a path
+    val bdf = Seq((1L, "a", 0), (2L, "b", 0), (3L, "c", 1)).toDF("k", "v", "bucket")
+    store.commitBuckets(bdf, "bk", "bucket", Seq(0, 1, 2), b => s"bk-$b")
+    assert(store.manifests().filter(_.stage == "bk").map(_.schema).toSet ==
+      Set("k BIGINT,v STRING"))
+    assertRecordedSchemaServesInferred(store, "bk")
+
+    // partitionBy on a string column whose values look numeric: its
+    // type is still inferred from the directory names (as INT) on both
+    // paths, because partition columns stay out of the recorded schema
+    val pdf = Seq(("1", 1L, "a"), ("2", 2L, "b")).toDF("p", "k", "v")
+    store.commit(pdf, "part", "p1", partitionBy = Seq("p"))
+    store.commit(pdf, "part", "p2", partitionBy = Seq("p"))
+    assert(store.read(spark, stage = Some("part")).schema("p").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assertRecordedSchemaServesInferred(store, "part")
+
+    // hidden partitions, served and dropped; then the compacted stage
+    val hidden = Seq("day" -> (col("ts").cast("long") / 86400L).cast("long"))
+    Seq((10L, "a"), (86400L * 2, "b")).zipWithIndex.foreach { case (r, i) =>
+      store.commit(Seq(r).toDF("ts", "v"), "hid", s"h$i", hiddenPartitions = hidden)
+    }
+    assertRecordedSchemaServesInferred(store, "hid", keepHidden = true)
+    assertRecordedSchemaServesInferred(store, "hid")
+    assert(store.compact(spark, "hid").nonEmpty)
+    assertRecordedSchemaServesInferred(store, "hid")
+    assert(store.compact(spark, "part").nonEmpty)
+    assertRecordedSchemaServesInferred(store, "part")
+  }
+
+  test("reads infer the schema when manifests lack one or disagree") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.MetadataBuilder
+    val (store, dir) = freshStore()
+    // field metadata does not survive DDL: nothing recorded, inferred
+    val md = new MetadataBuilder().putString("origin", "x").build()
+    store.commit(Seq((1L, "a")).toDF("k", "v").select($"k", $"v".as("v", md)), "meta", "m0")
+    assert(store.manifests().last.schema.isEmpty)
+    assert(store.read(spark, stage = Some("meta")).schema("v").metadata == md)
+
+    // a hand-written manifest without `schema` (an older store) reads
+    val old = java.nio.file.Paths.get(dir, "data", "snap-old")
+    Seq((5L, "e")).toDF("k", "v").write.parquet(old.toString)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dir, "_snapshots", "2.json"),
+      s"""{"id":2,"dir":"$old","stage":"old","marker":"mo","rows":1,"wall_ms":1}""")
+    assert(store.read(spark, stage = Some("old")).collect().map(_.getString(1)).toSeq == Seq("e"))
+
+    // two commits with different schemas, evolveSchema off: the read
+    // serves what inference over the same manifests serves
+    store.commit(Seq((1L, "a")).toDF("k", "v"), "ev", "e1")
+    store.commit(Seq((2L, "b", 9.5)).toDF("k", "v", "w"), "ev", "e2")
+    val ms = store.manifests().filter(_.stage == "ev")
+    assert(ms.map(_.schema).distinct.size == 2 && ms.forall(_.schema.nonEmpty))
+    val got = store.read(spark, stage = Some("ev"))
+    ms.foreach(m => store.writeManifest(m.copy(schema = ""), replaceExisting = true))
+    val want = store.read(spark, stage = Some("ev"))
+    assert(got.schema == want.schema)
+    assert(got.collect().toSeq.sortBy(_.toString) == want.collect().toSeq.sortBy(_.toString))
+  }
+
   test("commitBuckets: one write job, per-bucket lineage, empty buckets marker-only, replay no-op") {
     import spark.implicits._
     val (store, _) = freshStore()
