@@ -17,6 +17,7 @@ object PlanAudit {
     "join_salted",     // expect the salted key in the shuffle
     "agg_hash",        // expect partial+final HashAggregate, WSCG spans
     "kg_mentions",     // expect Generate(posexplode) inside the scan stage
+    "kg_links",        // expect ONE broadcast candidate-list join, in-row argmax, no shuffle
     "ann_bruteforce",  // expect broadcast of the 1-row query side
     "ann_lsh_batch",   // expect ONE equi-join on bucket + window rank
     "dedup_minhash_pairs", // expect band equi-join, no cartesian

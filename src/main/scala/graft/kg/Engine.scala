@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.{AcTrie, GazetteerMatchCountsExpr, GazetteerMatchesExpr, NormalizeSurface}
 
@@ -14,6 +15,9 @@ import graft.functions.{AcTrie, GazetteerMatchCountsExpr, GazetteerMatchesExpr, 
   * place so re-grounding against a real reference is a one-file change):
   *  - mention semantics: ASCII-folded token boundaries ([a-z0-9] word
   *    chars), longest-match-wins, non-overlapping, per-span counts;
+  *  - mention key: one mention row per (doc_id, span_idx, surface,
+  *    coarse_type) — occurrences are counted in-row — which is what
+  *    lets the link argmax run in-row over the alias's candidate list;
   *  - link tie-break: lexicographic max of (score, entity_id);
   *  - canonical id: lexicographic min of the alias component;
   *  - triple vocabulary: mentionedIn / hasType / depictedIn (adjacent
@@ -75,34 +79,65 @@ object Engine {
         col("m.n_occ").as("n_occ")) ++ carry.map(col): _*)
   }
 
-  /** Candidate generation: broadcast join against the anchor dictionary
-    * (alias_norm, entity_id, prior). */
+  /** The anchor dictionary (alias_norm, entity_id, prior) grouped once
+    * into per-alias candidate lists — Milne & Witten's
+    * surface → [(entity, commonness)] (SURVEY.md §1.3):
+    * (alias_norm, cands: array<struct<entity_id, prior>>). Collected and
+    * rebuilt as a local relation with the aggregate's schema, so each
+    * use broadcasts it without re-running the dictionary's plan. The
+    * dictionary is broadcast whole anyway, so the collect assumes no
+    * more about its size than [[candidates]] always did. */
+  def candidateLists(anchorDict: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val grouped = anchorDict.groupBy(col("alias_norm"))
+      .agg(collect_list(struct(col("entity_id"), col("prior"))).as("cands"))
+    anchorDict.sparkSession.createDataFrame(grouped.collect().toSeq.asJava, grouped.schema)
+  }
+
+  /** Candidate generation: ONE broadcast lookup per mention in the
+    * alias's candidate list ([[candidateLists]]). Returns one row per
+    * matched mention:
+    * (doc_id, span_idx, surface, coarse_type, n_occ, cands [, carry...]).
+    * Mentions whose surface has no dictionary entry drop out. */
   def candidates(mentions: DataFrame, anchorDict: DataFrame,
                  carry: Seq[String] = Nil): DataFrame =
-    mentions
-      .join(broadcast(anchorDict), col("surface") === col("alias_norm"))
-      .select(Seq(col("doc_id"), col("span_idx"), col("surface"),
-        col("coarse_type"), col("n_occ"), col("entity_id"),
-        col("prior")) ++ carry.map(col): _*)
+    candidatesFrom(mentions, candidateLists(anchorDict), carry)
 
-  /** Link scoring + per-mention argmax. `boost` is the context-score
-    * hook (a Column over the candidate row). Tie-break: lexicographic
-    * max of (score, entity_id) — total, deterministic. Carried columns
-    * join the groupBy key (they are constant within a mention's group,
-    * so the result set is unchanged and stays deterministic by
-    * construction — no first()-style nondeterminism). */
+  /** [[candidates]] over lists already built by [[candidateLists]] — a
+    * streaming query groups the dictionary once, not once per batch. */
+  private[graft] def candidatesFrom(mentions: DataFrame, lists: DataFrame,
+                                    carry: Seq[String]): DataFrame =
+    mentions
+      .join(broadcast(lists), col("surface") === col("alias_norm"))
+      .select(Seq(col("doc_id"), col("span_idx"), col("surface"),
+        col("coarse_type"), col("n_occ"), col("cands")) ++ carry.map(col): _*)
+
+  /** Link scoring + per-mention argmax, in-row: each candidate of the
+    * row's `cands` list scores `prior * boost * (1.0 + n_occ)` and the
+    * row keeps the lexicographic max of (score, entity_id) — total and
+    * deterministic. `boost` is the context-score hook, a Column over the
+    * candidate row: its `entity_id` and `prior` references are rebound
+    * to the list element, every other reference (doc_id, n_occ, carried
+    * columns) reads the mention row.
+    *
+    * ZERO shuffles: the argmax needs no regrouping because each mention
+    * row is unique per (doc_id, span_idx, surface, coarse_type) — the
+    * mention expression counts occurrences in-row — so one row in is
+    * one link out, carried columns included. */
   def links(candidates: DataFrame, boost: Column,
-            carry: Seq[String] = Nil): DataFrame =
+            carry: Seq[String] = Nil): DataFrame = {
+    val best = array_max(transform(col("cands"), c => {
+      val b = Bridge.rebind(boost,
+        Map("entity_id" -> c.getField("entity_id"), "prior" -> c.getField("prior")))
+      struct((c.getField("prior") * b * (lit(1.0) + col("n_occ"))).as("score"),
+        c.getField("entity_id").as("entity_id"))
+    }))
     candidates
-      .withColumn("score", col("prior") * boost * (lit(1.0) + col("n_occ")))
-      .groupBy((Seq("doc_id", "span_idx", "surface", "coarse_type") ++ carry)
-        .map(col): _*)
-      .agg(max_by(
-        struct(col("entity_id"), col("score")),
-        struct(col("score"), col("entity_id"))).as("best"))
+      .withColumn("best", best)
       .select(Seq(col("doc_id"), col("span_idx"), col("surface"), col("coarse_type"),
         col("best.entity_id").as("entity_id"),
         col("best.score").as("score")) ++ carry.map(col): _*)
+  }
 
   /** Entity canonicalization: CC over the alias graph (src, dst). */
   def canonical(aliasEdges: DataFrame): DataFrame =

@@ -1,5 +1,6 @@
 package graft.kg
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -79,9 +80,9 @@ object Pipeline {
         statsCol = Some("doc_id")) // per-bucket source doc_id ranges in lineage
     }
 
-    // Stage 2+3: candidates + link scoring (dictionary joins + argmax);
-    // adjacency threads through both so the triple stage needs only
-    // this snapshot.
+    // Stage 2+3: candidates + link scoring (one broadcast candidate-list
+    // lookup per mention, argmax in-row — no shuffle); adjacency threads
+    // through both so the triple stage needs only this snapshot.
     if (!done.contains("links")) {
       val mentions = store.read(spark, stage = Some("mentions"))
         .select(col("doc_id"), col("span_idx"), col("surface"),
@@ -92,7 +93,15 @@ object Pipeline {
         Engine.candidates(mentions,
           Stages.anchorDictLocal(spark, gazSeq.map(_._1)), carry),
         Stages.scoreBoost, carry)
-      store.commit(links, stage = "links", marker = "links")
+      // No shuffle precedes this write, so AQE no longer sizes its
+      // output: merge the mention read's splits down to the partition
+      // size AQE coalesces a shuffle to, or a small store carries one
+      // links file per split. Larger inputs keep their splits.
+      val advisory = JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+      val parts = (mentions.queryExecution.optimizedPlan.stats.sizeInBytes / advisory + 1)
+        .min(Int.MaxValue).toInt
+      store.commit(links.coalesce(parts), stage = "links", marker = "links")
     }
 
     // Stage 4: canonicalization (CC over the alias graph).

@@ -134,16 +134,22 @@ object Stages {
 
   /** One gazetteer collect serves the trie AND the anchor dictionary
     * (r6: the anchor side used to re-derive the gazetteer from the
-    * corpus inside its broadcast build — guide §1.2 step 1). */
-  def candidates(spark: SparkSession, dir: String): DataFrame = {
+    * corpus inside its broadcast build — guide §1.2 step 1). One row per
+    * mention carrying its candidate list ([[Engine.candidates]]). */
+  private def groupedCandidates(spark: SparkSession, dir: String): DataFrame = {
     val g = gazetteerSeq(spark, dir)
     Engine.candidates(
       Engine.mentions(spans(spark, dir), g),
       anchorDictFrom(spark, surfacesLocal(spark, g.map(_._1))))
   }
 
+  /** One row per (mention, candidate): the lists expanded with `inline`. */
+  def candidates(spark: SparkSession, dir: String): DataFrame =
+    groupedCandidates(spark, dir).select(col("doc_id"), col("span_idx"), col("surface"),
+      col("coarse_type"), col("n_occ"), inline(col("cands")))
+
   def links(spark: SparkSession, dir: String): DataFrame =
-    Engine.links(candidates(spark, dir), scoreBoost)
+    Engine.links(groupedCandidates(spark, dir), scoreBoost)
 
   def canonicalMap(spark: SparkSession, dir: String): DataFrame =
     Engine.canonical(aliasEdges(spark, dir))

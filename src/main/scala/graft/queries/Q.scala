@@ -12,7 +12,6 @@ final case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[Strin
 
 object Q {
   def apply(sql: String)(fn: (SparkSession, String) => DataFrame): Q = Q(fn, Some(sql))
-  def noOracle(fn: (SparkSession, String) => DataFrame): Q = Q(fn, None)
 
   /** Exact money sum: per-row cast to DECIMAL(18,2) (exact for 2-dp money
     * stored as double), exact decimal aggregation, then back to double.

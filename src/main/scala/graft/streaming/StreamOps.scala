@@ -146,7 +146,11 @@ object StreamOps {
     * exactly the dedup the batch DAG's final stage performs globally.
     * `canon` and `anchorDict` are the dictionary-sized static inputs
     * (alias graphs evolve slower than corpora; re-deriving canon per
-    * batch would be wasted work, re-running the pipeline re-binds it). */
+    * batch would be wasted work, re-running the pipeline re-binds it):
+    * the anchor dictionary is grouped into candidate lists ONCE per
+    * query, when this writer is built, and every batch broadcasts those
+    * lists — one row per mention carrying its `cands`, scored in-row,
+    * so the only shuffle left in a batch is the triple dedup. */
   def incrementalTriples(docsStream: DataFrame, gazetteer: Seq[(String, String)],
                          anchorDict: DataFrame,
                          boost: org.apache.spark.sql.Column,
@@ -159,11 +163,12 @@ object StreamOps {
     // nothing to aggregate batch-side.
     val records = Engine.mentions(
       Corpus.explodeSpansAdj(docsStream), gazetteer, carry)
+    val lists = Engine.candidateLists(anchorDict)
     records.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val links = Engine.links(
-          Engine.candidates(batch, anchorDict, carry), boost, carry)
+          Engine.candidatesFrom(batch, lists, carry), boost, carry)
         val triples = Engine.triples(links, canon, canonRows)
         store.commit(triples, stage = "triples",
           marker = s"triples-batch-$batchId"): Unit

@@ -2,6 +2,7 @@ package graft.kg
 
 import scala.util.Random
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -129,5 +130,72 @@ class GoldenPipelineSpec extends SparkSuite {
     // and the counted plan is shuffle-free: scan → project/generate only
     val plan = Engine.mentions(spans, gazetteer).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(1200))
+  }
+
+  /** The fan-out formulation in-row linking replaced: one row per
+    * (mention, candidate) from a plain dictionary join, scored, then
+    * regrouped on the mention key with a max_by argmax. */
+  private def fanOutLinks(mentions: DataFrame, dict: DataFrame, boost: Column,
+                          carry: Seq[String]): DataFrame =
+    mentions
+      .join(broadcast(dict), col("surface") === col("alias_norm"))
+      .select(Seq(col("doc_id"), col("span_idx"), col("surface"), col("coarse_type"),
+        col("n_occ"), col("entity_id"), col("prior")) ++ carry.map(col): _*)
+      .withColumn("score", col("prior") * boost * (lit(1.0) + col("n_occ")))
+      .groupBy((Seq("doc_id", "span_idx", "surface", "coarse_type") ++ carry).map(col): _*)
+      .agg(max_by(
+        struct(col("entity_id"), col("score")),
+        struct(col("score"), col("entity_id"))).as("best"))
+      .select(Seq(col("doc_id"), col("span_idx"), col("surface"), col("coarse_type"),
+        col("best.entity_id").as("entity_id"),
+        col("best.score").as("score")) ++ carry.map(col): _*)
+
+  test("in-row link argmax ≡ fan-out + groupBy max_by (rows, schema, score bits)") {
+    import spark.implicits._
+    val carry = Seq(Engine.AdjMedia)
+    val aliases = (0 until 8).map(i => s"alias$i")
+    val boosts = Seq(
+      "entity_id+doc_id" -> when(col("entity_id").endsWith("1") &&
+        col("doc_id").cast("long") % 3 === 0, lit(2.5))
+        .otherwise(lit(1.0)),
+      "prior" -> (lit(1.0) - col("prior") * lit(0.37) + length(col("entity_id")) / lit(7.0)),
+      "n_occ+carry" -> (lit(1.0) / (col("n_occ") + lit(1)) + size(col(Engine.AdjMedia))),
+      "stage" -> Stages.scoreBoost,
+      "none" -> lit(1.0))
+    def key(df: DataFrame) = df.collect().map { r =>
+      (r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getString(4),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(5)), r.getSeq[String](6))
+    }.sortBy(_.toString).toSeq
+
+    for (seed <- 1L to 4L) {
+      val rnd = new Random(seed)
+      // the mention key is unique, as the in-row mention counts make it;
+      // surfaces outside the dictionary must drop out of both forms
+      val mentions = (0 until 300).map { _ =>
+        val d = rnd.nextInt(60)
+        val media = (0 until rnd.nextInt(3)).map(k => s"media://$d/$k")
+        (d.toString, rnd.nextInt(4), if (rnd.nextInt(10) == 0) "unknown" else aliases(rnd.nextInt(8)),
+          Seq("PER", "LOC")(rnd.nextInt(2)), 1L + rnd.nextInt(5), media)
+      }.distinctBy(m => (m._1, m._2, m._3, m._4))
+        .toDF("doc_id", "span_idx", "surface", "coarse_type", "n_occ", Engine.AdjMedia)
+      // equal priors (score ties → entity_id tie-break), zero and
+      // negative priors, arbitrary doubles, and duplicate rows
+      val priors = Seq(0.5, 0.5, 0.0, -0.25, rnd.nextDouble(), rnd.nextDouble() * 3)
+      val rows = aliases.flatMap { a =>
+        (0 until 1 + rnd.nextInt(4)).map(e =>
+          (a, s"E${e}_$a", priors(rnd.nextInt(priors.length))))
+      }
+      val dupes = (0 until 4).map(_ => rows(rnd.nextInt(rows.length)))
+      val dict = rnd.shuffle(rows ++ dupes).toDF("alias_norm", "entity_id", "prior")
+
+      for ((name, boost) <- boosts) {
+        val got = Engine.links(Engine.candidates(mentions, dict, carry), boost, carry)
+        val want = fanOutLinks(mentions, dict, boost, carry)
+        assert(got.schema == want.schema, s"seed $seed, boost $name")
+        val (g, w) = (key(got), key(want))
+        assert(g.nonEmpty && g == w,
+          s"seed $seed, boost $name: ${g.diff(w).take(3)} / ${w.diff(g).take(3)}")
+      }
+    }
   }
 }

@@ -37,6 +37,10 @@ class PipelineSpec extends SparkSuite {
       assert(m.metrics.contains("min_doc_id") && m.metrics.contains("max_doc_id")
         && m.metrics("min_doc_id") <= m.metrics("max_doc_id"), m)
     }
+    // no shuffle precedes the link write for AQE to coalesce, yet a
+    // store this small still gets one links file, not one per split
+    val linksDir = new java.io.File(store.manifests().filter(_.stage == "links").head.dir)
+    assert(linksDir.listFiles().count(_.getName.endsWith(".parquet")) == 1)
 
     val nSnaps = store.manifests().size
     // resume on a complete run: nothing recommitted, and nothing derived

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec}
+import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -22,8 +23,13 @@ class PlanAuditGateSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def plan(key: String): String =
-    graft.SparkEntry.queries(key)(spark, sf).queryExecution.executedPlan.toString
+  private def executed(key: String): SparkPlan =
+    graft.SparkEntry.queries(key)(spark, sf).queryExecution.executedPlan
+
+  private def plan(key: String): String = executed(key).toString
+
+  private def shuffles(p: SparkPlan): Int =
+    collect(p) { case s: ShuffleExchangeExec => s }.size
 
   private def count(hay: String, needle: String): Int =
     needle.r.findAllMatchIn(hay).size
@@ -39,10 +45,16 @@ class PlanAuditGateSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   }
 
   test("kg_mentions: Aho–Corasick Generate over the scan, ZERO exchanges") {
-    val p = plan("kg_mentions")
-    assert(p.contains("gazetteer_match_counts"), p.take(900))
-    assert(!p.contains("Exchange"),
-      "the zero-shuffle mention stage regressed:\n" + p.take(1200))
+    val p = executed("kg_mentions")
+    assert(p.toString.contains("gazetteer_match_counts"), p.toString.take(900))
+    assert(shuffles(p) == 0,
+      "the zero-shuffle mention stage regressed:\n" + p.treeString.take(1200))
+  }
+
+  test("kg_links: one broadcast candidate-list join, in-row argmax, ZERO shuffles") {
+    val p = executed("kg_links")
+    assert(shuffles(p) == 0, "link scoring shuffles again:\n" + p.treeString.take(1500))
+    assert(collect(p) { case j: BroadcastHashJoinExec => j }.size == 1, p.treeString.take(1500))
   }
 
   test("ann_bruteforce: 1-row query broadcast + TakeOrderedAndProject") {
@@ -114,13 +126,12 @@ class PlanAuditGateSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   }
 
   test("text_langid: in-row counts + in-row argmax — zero exchanges (r6)") {
-    val p = plan("text_langid")
-    assert(!p.contains("Exchange"),
-      "langid shuffles again:\n" + p.take(1200))
+    val p = executed("text_langid")
+    assert(shuffles(p) == 0, "langid shuffles again:\n" + p.treeString.take(1200))
   }
 
   test("every audited key has a plan predicate in this spec or PlanPropertiesSpec") {
-    val here = Set("agg_hash", "kg_mentions", "ann_bruteforce", "ann_lsh_batch",
+    val here = Set("agg_hash", "kg_mentions", "kg_links", "ann_bruteforce", "ann_lsh_batch",
       "ann_lsh_probe", "ann_recall", "ann_ivf_probe", "dedup_minhash_pairs",
       "dedup_simhash_pairs", "kg_triples", "graph_pagerank", "graph_triangles")
     val inPlanProperties = Set("filter_pred", "project", "join_broadcast",

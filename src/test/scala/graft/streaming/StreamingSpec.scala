@@ -208,7 +208,12 @@ class StreamingSpec extends SparkSuite {
     val gazSeq = Stages.gazetteer(spark, sf)
       .select(col("surface"), col("coarse_type"))
       .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
-    val anchor = Stages.anchorDict(spark, sf).localCheckpoint(true)
+    val plain = Stages.anchorDict(spark, sf).localCheckpoint(true)
+    // every evaluation of the dictionary frame passes each of its rows
+    // through this UDF once
+    val evals = spark.sparkContext.longAccumulator("anchor-evals")
+    val tick = udf { (s: String) => evals.add(1); s }.asNondeterministic()
+    val anchor = plain.withColumn("alias_norm", tick(col("alias_norm")))
     val canon = Stages.canonicalMap(spark, sf).localCheckpoint(true)
     val in = Files.createTempDirectory("stkg2-in").toString
     val storeDir = Files.createTempDirectory("stkg2-store").toString
@@ -225,6 +230,9 @@ class StreamingSpec extends SparkSuite {
     try q.processAllAvailable() finally q.stop()
 
     assert(store.manifests().count(_.stage == "triples") == 3) // one commit per batch
+    // the dictionary is grouped once per query, not once per batch
+    assert(evals.value == plain.count(),
+      s"${evals.value} dictionary rows evaluated for ${plain.count()} rows over 3 batches")
     def tset(df: org.apache.spark.sql.DataFrame) =
       df.select("subj", "pred", "obj").distinct().collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
