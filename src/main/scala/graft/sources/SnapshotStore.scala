@@ -236,7 +236,11 @@ final class SnapshotStore private (rootStr: String) {
     parseStrArray(js, "files"), parseStrArray(js, "hidden_exprs"),
     parseLongArray(js, "replaces"), fieldOpt(js, "schema").getOrElse(""))
 
-  def manifests(): Seq[Manifest] = {
+  def manifests(): Seq[Manifest] =
+    manifestTexts().map(parse).sortBy(_.id)
+
+  /** The text of every committed manifest, unordered. */
+  private def manifestTexts(): Seq[String] = {
     // a cached instance (forRoot) can outlive its directories — e.g. a
     // bench fixture that wipes the store between passes; a missing
     // _snapshots dir IS an empty store, not an error
@@ -250,8 +254,8 @@ final class SnapshotStore private (rootStr: String) {
         val n = p.getFileName.toString
         n.endsWith(".json") && !n.startsWith(".")
       }
-      .map(p => parse(Files.readString(p)))
-      .toSeq.sortBy(_.id)
+      .map(p => Files.readString(p))
+      .toSeq
     finally list.close()
   }
 
@@ -270,7 +274,11 @@ final class SnapshotStore private (rootStr: String) {
     ms.filterNot(m => superseded.contains(m.id))
   }
 
-  def markers(): Set[String] = manifests().map(_.marker).toSet
+  /** Every committed marker. Reads only each manifest's `marker` field:
+    * a no-op resume decides every stage from this set alone, so it
+    * costs a listing and one short scan per manifest, not a full parse
+    * whose cost swings with how far the JIT has compiled the parser. */
+  def markers(): Set[String] = manifestTexts().map(field(_, "marker")).toSet
 
   /** True iff (stage, marker) has committed rows AND every data
     * location its manifests record is still fully present on disk —
