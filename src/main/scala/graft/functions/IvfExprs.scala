@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * evaluated ~20× slower than this loop, the repo's own VecDot lesson).
   *
   * The centroid matrix rides a TORRENT BROADCAST handle embedded via
-  * `addReferenceObj` (the [[GazetteerMatchesExpr]] pattern): K×dim
+  * `addReferenceObj` (the [[GazetteerMatchCountsExpr]] pattern): K×dim
   * longs ship to each executor once, not once per task in the plan, and
   * the generated code calls one static method — the surrounding
   * whole-stage-codegen pipeline stays fused.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * (SURVEY.md §2.8 U6): after `register(spark)`,
   * `SELECT normalize_surface(text) FROM docs` works in plain SQL, and
   * `vec_dot(a, b)` is available for embedding math.
-  * (GazetteerMatchesExpr needs a broadcast trie handle, so it stays a
+  * (GazetteerMatchCountsExpr needs a broadcast trie handle, so it stays a
   * Column-API constructor — registry builders only receive child
   * expressions.)
   */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.functions.{AcTrie, GazetteerMatchCountsExpr, GazetteerMatchesExpr, NormalizeSurface}
+import graft.functions.{AcTrie, GazetteerMatchCountsExpr}
 
 /** Fixture-agnostic KG-construction engine: the five-stage DAG over any
   * interleaved-span corpus + dictionaries (BASELINE.json north_star).
@@ -24,23 +24,6 @@ import graft.functions.{AcTrie, GazetteerMatchCountsExpr, GazetteerMatchesExpr, 
   *    media span).
   */
 object Engine {
-
-  /** Raw mention match rows, BEFORE the per-span occurrence count: one
-    * Aho–Corasick automaton pass per span via the broadcast expression
-    * (U1), surfaces normalized (U2). Stateless Column transforms only —
-    * this is the part a streaming source can run in append mode with
-    * no watermark (graft.streaming.StreamOps.streamingMentions). */
-  def mentionRows(spans: DataFrame, gazetteer: Seq[(String, String)]): DataFrame = {
-    val spark = spans.sparkSession
-    val trie = spark.sparkContext.broadcast(AcTrie(gazetteer))
-    spans
-      .where(col("kind") === "text")
-      .select(col("doc_id"), col("span_idx"),
-        explode(GazetteerMatchesExpr(col("text"), trie)).as("m"))
-      .select(col("doc_id"), col("span_idx"),
-        NormalizeSurface(col("m.surface")).as("surface"),
-        col("m.coarse_type").as("coarse_type"))
-  }
 
   /** Name of the in-row media-adjacency column
     * ([[Corpus.explodeSpansAdj]]) that the `carry` parameter threads

@@ -103,20 +103,13 @@ class GraftCatalog extends TableCatalog {
     // which snapshots they serve): flat dirs as roots; partitioned
     // snapshots as the manifests' FILE lists with basePath = the
     // stage's shared hive root (directory discovery cannot union
-    // several partitioned roots; see SnapshotStore.Manifest.files);
-    // pre-file-manifest partitioned dirs count as one legacy group
-    // each: Spark cannot union several partitioned roots in one scan
-    // even with identical specs (re-verified r5) — the upgrade path
-    // for such stages is SnapshotStore.migrateLegacyPartitioned.
-    val (flatDirs, legacyDirs, fileGroups) = st.layoutGroups(ms)
-    val groupCount =
-      (if (flatDirs.nonEmpty) 1 else 0) + legacyDirs.size + fileGroups.size
+    // several partitioned roots; see SnapshotStore.Manifest.files).
+    val (flatDirs, fileGroups) = st.layoutGroups(ms)
+    val groupCount = (if (flatDirs.nonEmpty) 1 else 0) + fileGroups.size
     if (groupCount > 1) throw new IllegalStateException(
       s"$catName.$stageName: stage spans ${groupCount} incompatible layouts — " +
         "one scan cannot serve them; read via SnapshotStore.read (which " +
-        "unions layout groups), or run SnapshotStore.migrateLegacyPartitioned(" +
-        s"'$stageName') to upgrade pre-file-manifest partitioned snapshots " +
-        "into the single SQL-servable file-granular layout")
+        "unions layout groups)")
     // mergeSchema: a stage whose later snapshots added columns must
     // serve the unified schema (matching SnapshotStore.read(
     // evolveSchema = true)) — without it the catalog serves whichever
@@ -130,7 +123,7 @@ class GraftCatalog extends TableCatalog {
           (group.flatMap(_.files).toList,
             java.util.Map.of("mergeSchema", "true", "basePath", layoutRoot))
         case None =>
-          ((flatDirs ++ legacyDirs).toList, java.util.Map.of("mergeSchema", "true"))
+          (flatDirs.toList, java.util.Map.of("mergeSchema", "true"))
       }
     val (paths, options) = pathsAndOpts
     if (paths.isEmpty) throw new NoSuchTableException(ident)

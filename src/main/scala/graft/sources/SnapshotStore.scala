@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.json.JsonWriteFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -42,6 +45,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * "resumable from checkpoint with per-partition lineage + metrics").
   */
 object SnapshotStore {
+  /** The manifest codec. Lower-case hex in `\u00XX` escapes keeps the
+    * bytes of manifests written before the store used Jackson. */
+  private val Json = JsonMapper.builder().disable(JsonWriteFeature.WRITE_HEX_UPPER_CASE).build()
+
   private val instances = new java.util.concurrent.ConcurrentHashMap[String, SnapshotStore]()
 
   /** One store instance per root within a JVM: `commit` serializes
@@ -108,139 +115,47 @@ final class SnapshotStore private (rootStr: String) {
                             replaces: Seq[Long] = Nil,
                             schema: String = "")
 
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
   /** Empty arrays, an empty metrics map and an empty schema are left
-    * out: the parser reads a missing key as empty, and most manifests
+    * out: [[parse]] reads a missing key as empty, and most manifests
     * record no layout at all. */
   private def render(m: Manifest): String = {
-    def arr(key: String, vs: Seq[String]) =
-      if (vs.isEmpty) "" else vs.mkString(s",${q(key)}:[", ",", "]")
-    val met = m.metrics.toSeq.sorted.map { case (k, v) => s"${q(k)}:$v" }
-    s"""{"id":${m.id},"dir":${q(m.dir)},"stage":${q(m.stage)},"marker":${q(m.marker)},"rows":${m.rows},"wall_ms":${m.wallMs}""" +
-      (if (m.schema.isEmpty) "" else s""","schema":${q(m.schema)}""") +
-      arr("hidden", m.hidden.map(q)) + arr("hidden_exprs", m.hiddenExprs.map(q)) +
-      arr("parts", m.parts.map(q)) + arr("files", m.files.map(q)) +
-      arr("replaces", m.replaces.map(_.toString)) +
-      (if (met.isEmpty) "" else met.mkString(""","metrics":{""", ",", "}")) + "}"
+    val o = SnapshotStore.Json.createObjectNode()
+      .put("id", m.id).put("dir", m.dir).put("stage", m.stage).put("marker", m.marker)
+      .put("rows", m.rows).put("wall_ms", m.wallMs)
+    if (m.schema.nonEmpty) o.put("schema", m.schema)
+    def arr(key: String, vs: Seq[String]): Unit =
+      if (vs.nonEmpty) { val a = o.putArray(key); vs.foreach(a.add(_)) }
+    arr("hidden", m.hidden); arr("hidden_exprs", m.hiddenExprs)
+    arr("parts", m.parts); arr("files", m.files)
+    if (m.replaces.nonEmpty) { val a = o.putArray("replaces"); m.replaces.foreach(a.add(_)) }
+    if (m.metrics.nonEmpty) {
+      val mo = o.putObject("metrics")
+      m.metrics.toSeq.sorted.foreach { case (k, v) => mo.put(k, v) }
+    }
+    SnapshotStore.Json.writeValueAsString(o)
   }
 
-  private val strRe = """"((?:[^"\\]|\\.)*)"""".r
-
-  /** Index just past `"key":` among the manifest's TOP-LEVEL keys,
-    * found with a quote- and depth-aware scan: tag bytes inside a
-    * string (a marker, a path) or inside the nested metrics map are
-    * never taken for the key. [[q]] escapes every quote, so a rendered
-    * string cannot contain the tag anyway, but the parser should not
-    * depend on the renderer's escaping invariant at a distance
-    * (ADVICE r4). */
-  private def valueAt(js: String, key: String): Option[Int] = {
-    val tag = "\"" + key + "\":"
-    var i = 0; var depth = 0; var inStr = false
-    while (i < js.length) {
-      val c = js.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else if (c == '"') {
-        if (depth == 1 && js.startsWith(tag, i)) return Some(i + tag.length)
-        inStr = true
-      } else if (c == '{' || c == '[') depth += 1
-      else if (c == '}' || c == ']') depth -= 1
-      i += 1
-    }
-    None
+  private def parse(f: Path): Manifest = {
+    val n = SnapshotStore.Json.readTree(f.toFile)
+    def req(key: String) = Option(n.get(key)).getOrElse(missing(key, f))
+    def elems(key: String) = Option(n.get(key)).toSeq.flatMap(_.elements.asScala)
+    def strs(key: String) = elems(key).map(_.asText)
+    Manifest(req("id").asLong, req("dir").asText, req("stage").asText,
+      req("marker").asText, req("rows").asLong, req("wall_ms").asLong,
+      Option(n.get("metrics")).toSeq.flatMap(_.properties.asScala)
+        .map(e => e.getKey -> e.getValue.asLong).toMap,
+      strs("hidden"), strs("parts"), strs("files"), strs("hidden_exprs"),
+      elems("replaces").map(_.asLong), Option(n.get("schema")).fold("")(_.asText))
   }
 
-  /** Body of the JSON array or object at `key`, up to its closing
-    * bracket found with a quote-aware scan — a regex bounded by the
-    * first ']' would truncate on a ']' INSIDE a recorded path (e.g. a
-    * store root named `run[2026]`), silently dropping the tail of a
-    * file list. */
-  private def containerBody(js: String, key: String, open: Char, close: Char): Option[String] = {
-    val at = valueAt(js, key).filter(p => p < js.length && js.charAt(p) == open)
-      .getOrElse(return None)
-    val from = at + 1
-    var i = from; var inStr = false
-    while (i < js.length) {
-      val c = js.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else if (c == '"') inStr = true
-      else if (c == close) return Some(js.substring(from, i))
-      i += 1
-    }
-    None
-  }
-
-  /** Inverse of [[q]] for every string the parser reads — without it a
-    * name containing a quote or backslash reads back still-escaped and
-    * then fails to match the real column (ADVICE r3), and a marker
-    * containing a control character reads back as `u00XX` text, so
-    * [[markers]] misses it and a replay commits the same data twice.
-    * Belt-and-braces: [[commit]] also rejects hidden names outside a
-    * safe identifier alphabet, so escapes never occur in hidden entries. */
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder; var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\\' && i + 1 < s.length) {
-        i += 1
-        s.charAt(i) match {
-          case 'n' => sb.append('\n'); i += 1
-          case 'u' => sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar); i += 5
-          case c => sb.append(c); i += 1
-        }
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
-
-  private def parseStrArray(js: String, key: String): Seq[String] =
-    containerBody(js, key, '[', ']').toSeq.flatMap(b =>
-      strRe.findAllMatchIn(b).map(g => unescape(g.group(1))).toSeq)
-
-  private val longRe = """-?\d+""".r
-  /** Number-array field; absent (pre-compaction manifests) = empty. */
-  private def parseLongArray(js: String, key: String): Seq[Long] =
-    containerBody(js, key, '[', ']').toSeq.flatMap(b =>
-      longRe.findAllIn(b).map(_.toLong).toSeq)
-
-  private val kvRe = """"((?:[^"\\]|\\.)*)":(-?\d+)""".r
-
-  private def parseMetrics(js: String): Map[String, Long] =
-    containerBody(js, "metrics", '{', '}').map { b =>
-      kvRe.findAllMatchIn(b)
-        .map(kv => unescape(kv.group(1)) -> kv.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
-
-  /** A scalar field: a string (unescaped) or a number's digits. */
-  private def fieldOpt(js: String, name: String): Option[String] =
-    valueAt(js, name).map { p =>
-      if (js.charAt(p) == '"') unescape(strRe.findPrefixMatchOf(js.substring(p)).get.group(1))
-      else js.substring(p).takeWhile(c => c.isDigit || c == '-')
-    }
-
-  private def field(js: String, name: String): String =
-    fieldOpt(js, name).getOrElse(
-      throw new IllegalStateException(s"manifest missing $name: $js"))
-
-  private def parse(js: String): Manifest = Manifest(
-    field(js, "id").toLong, field(js, "dir"), field(js, "stage"),
-    field(js, "marker"), field(js, "rows").toLong, field(js, "wall_ms").toLong,
-    parseMetrics(js), parseStrArray(js, "hidden"), parseStrArray(js, "parts"),
-    parseStrArray(js, "files"), parseStrArray(js, "hidden_exprs"),
-    parseLongArray(js, "replaces"), fieldOpt(js, "schema").getOrElse(""))
+  private def missing(key: String, f: Path): Nothing =
+    throw new IllegalStateException(s"manifest missing $key: $f")
 
   def manifests(): Seq[Manifest] =
-    manifestTexts().map(parse).sortBy(_.id)
+    manifestFiles().map(parse).sortBy(_.id)
 
-  /** The text of every committed manifest, unordered. */
-  private def manifestTexts(): Seq[String] = {
+  /** Every committed manifest file, unordered. */
+  private def manifestFiles(): Seq[Path] = {
     // a cached instance (forRoot) can outlive its directories — e.g. a
     // bench fixture that wipes the store between passes; a missing
     // _snapshots dir IS an empty store, not an error
@@ -254,7 +169,6 @@ final class SnapshotStore private (rootStr: String) {
         val n = p.getFileName.toString
         n.endsWith(".json") && !n.startsWith(".")
       }
-      .map(p => Files.readString(p))
       .toSeq
     finally list.close()
   }
@@ -274,18 +188,30 @@ final class SnapshotStore private (rootStr: String) {
     ms.filterNot(m => superseded.contains(m.id))
   }
 
-  /** Every committed marker. Reads only each manifest's `marker` field:
-    * a no-op resume decides every stage from this set alone, so it
-    * costs a listing and one short scan per manifest, not a full parse
-    * whose cost swings with how far the JIT has compiled the parser. */
-  def markers(): Set[String] = manifestTexts().map(field(_, "marker")).toSet
+  /** Every committed marker. Streams each manifest file's top-level
+    * fields up to `marker` and stops there: a no-op resume decides every
+    * stage from this set alone, so it costs a listing and one short scan
+    * per manifest, not a full parse whose cost swings with how far the
+    * JIT has compiled the parser. */
+  def markers(): Set[String] = manifestFiles().map { f =>
+    val p = SnapshotStore.Json.createParser(f.toFile)
+    try {
+      p.nextToken() // the manifest object
+      // nextFieldName + getText: the calls [[parse]]'s readTree makes,
+      // so the scan runs code the JIT has already compiled
+      var key = p.nextFieldName()
+      while (key != null && key != "marker") { p.nextToken(); p.skipChildren(); key = p.nextFieldName() }
+      if (key == null) missing("marker", f)
+      p.nextToken(); p.getText
+    } finally p.close()
+  }.toSet
 
   /** True iff (stage, marker) has committed rows AND every data
     * location its manifests record is still fully present on disk —
     * the resume-or-recompute probe for callers that still hold the
     * recomputable source (Dedup's sketch resume): a
     * committed-but-externally-wiped snapshot (a state [[manifests]]
-    * and [[migrateLegacyPartitioned]] tolerate) reads as dead here, so
+    * tolerates) reads as dead here, so
     * the caller recomputes instead of crashing in [[read]] or
     * mid-scan on missing files (r5 review). Conservative in the safe
     * direction only: a false `true` (files vanish between probe and
@@ -309,74 +235,33 @@ final class SnapshotStore private (rootStr: String) {
     }
   }
 
-  /** `replaceExisting` is passed ONLY by the legacy-migration rewrite
-    * (which overwrites its own `<id>.json`): the JDK leaves
-    * replace-on-atomic-move implementation-specific (POSIX rename
-    * replaces; other filesystems may throw), so that one caller gets a
-    * replace-move fallback. Fresh commits claim the id with
-    * `Files.createLink` — link(2) is atomic AND exclusive (EEXIST),
-    * whereas ATOMIC_MOVE on POSIX is rename(2), which silently
-    * REPLACES an existing target, so a move alone cannot enforce the
-    * duplicate-id fail-loudly contract against a cross-process racer
-    * (r5 review). A duplicate-id race must fail loudly, never clobber
-    * a committed manifest, and a commit must never degrade to a
-    * non-atomic write. */
-  private[sources] def writeManifest(m: Manifest,
-                                     replaceExisting: Boolean = false): Unit = {
+  /** Claims the id with `Files.createLink`: link(2) is atomic AND
+    * exclusive (EEXIST), whereas ATOMIC_MOVE on POSIX is rename(2),
+    * which silently REPLACES an existing target, so a move alone cannot
+    * enforce the duplicate-id fail-loudly contract against a
+    * cross-process racer (r5 review). A duplicate-id race must fail
+    * loudly, never clobber a committed manifest, and a commit must
+    * never degrade to a non-atomic write. */
+  private[sources] def writeManifest(m: Manifest): Unit = {
     Files.createDirectories(snapsDir) // recreate if wiped since construction
     val tmp = Files.createTempFile(snapsDir, s".tmp-${m.id}", ".tmp")
     Files.write(tmp, render(m).getBytes(StandardCharsets.UTF_8))
     val dst = snapsDir.resolve(s"${m.id}.json")
-    if (replaceExisting) {
-      try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.AtomicMoveNotSupportedException =>
-          Files.move(tmp, dst, StandardCopyOption.REPLACE_EXISTING)
-      }
-    } else {
-      try { Files.createLink(dst, tmp); Files.delete(tmp) }
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          Files.delete(tmp) // the dot-prefixed orphan would be invisible, but tidy
-          throw new IllegalStateException(
-            s"snapshot id ${m.id} already committed in $root — concurrent " +
-              "writers must share one SnapshotStore.forRoot instance per JVM " +
-              "and one driver per store across processes", e)
-        case _: UnsupportedOperationException |
-             _: java.nio.file.FileSystemException =>
-          // hard links unavailable (exotic fs): fall back to the atomic
-          // move; duplicate-id exclusivity then follows that fs's move
-          // semantics, which is the strongest guarantee it offers
-          Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      }
+    try { Files.createLink(dst, tmp); Files.delete(tmp) }
+    catch {
+      case e: java.nio.file.FileAlreadyExistsException =>
+        Files.delete(tmp) // the dot-prefixed orphan would be invisible, but tidy
+        throw new IllegalStateException(
+          s"snapshot id ${m.id} already committed in $root — concurrent " +
+            "writers must share one SnapshotStore.forRoot instance per JVM " +
+            "and one driver per store across processes", e)
+      case _: UnsupportedOperationException |
+           _: java.nio.file.FileSystemException =>
+        // hard links unavailable (exotic fs): fall back to the atomic
+        // move; duplicate-id exclusivity then follows that fs's move
+        // semantics, which is the strongest guarantee it offers
+        Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
     }
-  }
-
-  /** Relocates a snapshot's parquet files into the stage's shared hive
-    * tree under snapshot-unique names (`snap-<id>-<file>`), keeping
-    * each file's hive partition fragment. One loop for BOTH writers of
-    * the file-granular layout — fresh commits (`move = true`: same
-    * filesystem, atomic) and legacy migration (`move = false`: the
-    * source must stay intact until the manifest rewrite lands) — so
-    * the on-disk naming scheme cannot fork between them. Returns the
-    * target paths, i.e. the manifest's file list. */
-  private def relocateIntoStageRoot(src: Path, stageRoot: Path, id: Long,
-                                    move: Boolean): List[String] = {
-    val walk = Files.walk(src)
-    try walk.iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .map { f =>
-        val rel = src.relativize(f)
-        val target = Option(rel.getParent)
-          .map(stageRoot.resolve).getOrElse(stageRoot)
-          .resolve(s"snap-$id-${f.getFileName}")
-        Files.createDirectories(target.getParent)
-        if (move) Files.move(f, target, StandardCopyOption.ATOMIC_MOVE)
-        else Files.copy(f, target, StandardCopyOption.REPLACE_EXISTING)
-        target.toString
-      }.toList
-    finally walk.close() // release the dir handles the stream holds
   }
 
   /** A stage named with the SQL layout-view suffix would be silently
@@ -431,10 +316,8 @@ final class SnapshotStore private (rootStr: String) {
              statsCols: Seq[String] = Nil,
              hiddenPartitions: Seq[(String, org.apache.spark.sql.Column)] = Nil,
              replaces: Seq[Long] = Nil): Option[Long] = synchronized {
-    // hidden names also become hive dir names and manifest JSON — keep
-    // them in a safe identifier alphabet so the dir layout and the
-    // regex-parsed manifest round-trip exactly (ADVICE r3: ']' in a
-    // name would break hiddenRe; escapes would break read()'s drop)
+    // hidden names also become hive dir names — keep them in a safe
+    // identifier alphabet so the dir layout round-trips exactly
     (hiddenPartitions.map(_._1) ++ partitionBy).foreach { n =>
       require(n.matches("[A-Za-z_][A-Za-z0-9_]*"),
         s"partition column name '$n' must match [A-Za-z_][A-Za-z0-9_]*")
@@ -502,8 +385,22 @@ final class SnapshotStore private (rootStr: String) {
     val (finalDir, files) =
       if (!partitioned) (dir.toString, Nil)
       else {
+        // each parquet file moves into the stage's shared hive tree under
+        // a snapshot-unique name (`snap-<id>-<file>`), keeping its hive
+        // partition fragment; the targets are the manifest's file list
         val stageRoot = dataDir.resolve(s"part-$stage")
-        val moved = relocateIntoStageRoot(dir, stageRoot, id, move = true)
+        val walk = Files.walk(dir)
+        val moved = try walk.iterator().asScala
+          .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+          .map { f =>
+            val target = Option(dir.relativize(f).getParent)
+              .map(stageRoot.resolve).getOrElse(stageRoot)
+              .resolve(s"snap-$id-${f.getFileName}")
+            Files.createDirectories(target.getParent)
+            Files.move(f, target, StandardCopyOption.ATOMIC_MOVE)
+            target.toString
+          }.toList
+        finally walk.close() // release the dir handles the stream holds
         rmTmpTree(dir)
         (stageRoot.toString, moved)
       }
@@ -627,11 +524,6 @@ final class SnapshotStore private (rootStr: String) {
             p.getFileName.toString.endsWith(".parquet") &&
             !refFiles.contains(p.toAbsolutePath.normalize))
           .toList finally walk.close()
-        // a legacy (pre-file-manifest) partitioned snapshot records the
-        // tree-external snap dir, never the shared tree — but guard
-        // against a manifest whose dir IS this tree with empty files
-        // (the zero-row partitioned shape): such a tree may host data
-        // a future migrate will claim, so only file-level deletes here
         orphans.foreach { p => Files.delete(p); removed += 1 }
       } else if (!refDirs.exists(_.startsWith(abs)) &&
           !refFiles.exists(_.startsWith(abs))) {
@@ -747,70 +639,23 @@ final class SnapshotStore private (rootStr: String) {
 
   /** Layout classification shared by [[read]]/[[readPruned]] and the
     * V2 catalog (one set of rules, or the SQL surface and the
-    * programmatic one diverge on which snapshots they serve):
-    * (flat dirs — one multi-path scan; legacy per-snapshot partitioned
-    * dirs from pre-file-manifest commits — each its own single-root
-    * scan: Spark's directory discovery CANNOT union several
-    * partitioned roots even with identical specs (re-verified r5:
-    * multi-path read of two same-spec hive roots throws
-    * CONFLICTING_DIRECTORY_STRUCTURES), so the SQL-unreadability of
-    * multi-legacy stages (ADVICE r4) is fixed by the explicit
-    * [[migrateLegacyPartitioned]] upgrade instead; file groups — one
-    * file-list scan per stage layout root).
-    * Zero-row snapshots (marker-only) contribute nothing. */
+    * programmatic one diverge on which snapshots they serve): flat
+    * dirs — one multi-path scan — and file groups — one file-list scan
+    * per stage layout root. Zero-row snapshots (marker-only) contribute
+    * nothing. A snapshot with rows and a recorded layout but no file
+    * list (the pre-file-manifest partitioned layout) is neither, so it
+    * fails loudly instead of dropping out of the read. */
   private[sources] def layoutGroups(ms: Seq[Manifest])
-      : (Seq[String], Seq[String], Seq[(String, Seq[Manifest])]) = {
-    def exists(d: String) = Files.exists(Paths.get(d))
+      : (Seq[String], Seq[(String, Seq[Manifest])]) = {
+    val unlisted = ms.filter(m =>
+      m.files.isEmpty && (m.parts.nonEmpty || m.hidden.nonEmpty) && m.rows > 0)
+    require(unlisted.isEmpty,
+      s"snapshot(s) ${unlisted.map(_.id).mkString(",")} in $root record a " +
+        "partition layout but no file list — the pre-file-manifest partitioned " +
+        "layout, which this store no longer reads")
     val flatDirs = ms.filter(m => m.parts.isEmpty && m.hidden.isEmpty)
-      .map(_.dir).filter(exists)
-    // pre-file-manifest partitioned snapshots: layout recorded, no
-    // file list, own snap-<id> dir (rows > 0 excludes the NEW zero-row
-    // partitioned commits, whose dir is the shared root)
-    val legacyDirs = ms.filter(m =>
-        m.files.isEmpty && (m.parts.nonEmpty || m.hidden.nonEmpty) && m.rows > 0)
-      .map(_.dir).filter(exists).distinct
-    val fileGroups = ms.filter(_.files.nonEmpty).groupBy(_.dir).toSeq.sortBy(_._1)
-    (flatDirs, legacyDirs, fileGroups)
-  }
-
-  /** Upgrades a stage's pre-file-manifest partitioned snapshots to the
-    * file-granular layout (shared hive tree + per-snapshot file lists),
-    * which is what makes a stage with SEVERAL partitioned snapshots
-    * servable as ONE SQL scan — Spark cannot union multiple partitioned
-    * roots in one read (ADVICE r4 upgrade regression; the constraint is
-    * re-verified in the spec). Crash-safe order per snapshot: files are
-    * COPIED into the shared tree under snapshot-unique names, then the
-    * manifest is atomically rewritten to point at them, then the legacy
-    * dir is deleted — a crash before the rewrite leaves readers on the
-    * intact legacy dir plus invisible orphans in the shared tree (file
-    * lists, never directory listings, drive reads there); a crash after
-    * it leaves a stale legacy dir that no manifest references. Returns
-    * the number of migrated snapshots. */
-  def migrateLegacyPartitioned(stage: String): Int = synchronized {
-    val legacy = manifests().filter(m =>
-      m.stage == stage && m.files.isEmpty &&
-        (m.parts.nonEmpty || m.hidden.nonEmpty) && m.rows > 0)
-    val stageRoot = dataDir.resolve(s"part-$stage")
-    // a legacy manifest whose snap dir was externally wiped (tolerated
-    // elsewhere — the store serves the surviving snapshots) has nothing
-    // to relocate and does NOT count as migrated
-    legacy.count { m =>
-      val src = Paths.get(m.dir)
-      Files.isDirectory(src) && {
-        val copied = relocateIntoStageRoot(src, stageRoot, m.id, move = false)
-        // a dir with no parquet files (partially wiped) must NOT be
-        // rewritten: dir=stageRoot with files=Nil would re-classify the
-        // manifest as a legacy dir spanning the SHARED stage tree —
-        // reads would double-serve every migrated snapshot and a repeat
-        // migrate would copy the tree onto itself
-        copied.nonEmpty && {
-          writeManifest(m.copy(dir = stageRoot.toString, files = copied),
-            replaceExisting = true)
-          rmTmpTree(src)
-          true
-        }
-      }
-    }
+      .map(_.dir).filter(d => Files.exists(Paths.get(d)))
+    (flatDirs, ms.filter(_.files.nonEmpty).groupBy(_.dir).toSeq.sortBy(_._1))
   }
 
   /** Source frames for a selected manifest set (see [[layoutGroups]];
@@ -829,9 +674,8 @@ final class SnapshotStore private (rootStr: String) {
       val rd0 = schema.orElse(recorded).map(spark.read.schema).getOrElse(spark.read)
       if (evolveSchema) rd0.option("mergeSchema", "true") else rd0
     }
-    val (flatDirs, legacyDirs, fileGroups) = layoutGroups(ms)
+    val (flatDirs, fileGroups) = layoutGroups(ms)
     (if (flatDirs.nonEmpty) Seq(reader().parquet(flatDirs: _*)) else Nil) ++
-      legacyDirs.map(d => reader().parquet(d)) ++
       fileGroups.map { case (layoutRoot, group) =>
         reader().option("basePath", layoutRoot).parquet(group.flatMap(_.files): _*)
       }

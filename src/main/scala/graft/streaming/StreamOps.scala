@@ -117,14 +117,12 @@ object StreamOps {
     * through the IDENTICAL batch operators — Corpus.explodeSpans and
     * Engine.mentions (broadcast Aho–Corasick, codegen'd) — because
     * both are stateless Column transforms. Stateless ⇒ append mode,
-    * no watermark needed; at 10^12 docs this is how a continuously
-    * ingested corpus feeds the same snapshot store the batch DAG
-    * resumes from (compose with `snapshotSink`; the per-span n_occ
-    * aggregation runs batch-side inside foreachBatch, where each doc
-    * is whole). */
+    * no watermark needed. The per-span n_occ counts are taken in-row,
+    * and each document row is whole inside one micro-batch, so they
+    * equal the batch counts; compose with `snapshotSink` to feed a
+    * snapshot store. */
   def streamingMentions(docs: DataFrame, gazetteer: Seq[(String, String)]): DataFrame =
-    graft.kg.Engine.mentionRows(
-      graft.kg.Corpus.explodeSpans(docs), gazetteer)
+    graft.kg.Engine.mentions(graft.kg.Corpus.explodeSpans(docs), gazetteer)
 
   /** Incremental linking end-to-end: the FULL KG DAG driven by a
     * document stream. The corpus-scan stage — mention rows carrying

@@ -66,16 +66,6 @@ class AcTrieSpec extends SparkSuite {
     assert(m.map { case (b, e, p) => (b, e, trie.patternAt(p)) }.toSeq == Seq((0, 3, "abc")))
   }
 
-  test("expression returns struct array usable with posexplode") {
-    import spark.implicits._
-    val trie = spark.sparkContext.broadcast(AcTrie(Seq("fox" -> "PER", "dog" -> "LOC")))
-    val out = Seq("The Fox and the dog. fox!").toDF("t")
-      .select(explode(GazetteerMatchesExpr(col("t"), trie)).as("m"))
-      .select("m.begin", "m.end", "m.surface", "m.coarse_type")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getString(3)))
-    assert(out.toSeq == Seq((4, 7, "Fox", "PER"), (16, 19, "dog", "LOC"), (21, 24, "fox", "PER")))
-  }
-
   test("match counts: patterns sharing (normalized surface, type) merge into one group") {
     import spark.implicits._
     // "new-york" and "new york" both normalize to "new york"/LOC →

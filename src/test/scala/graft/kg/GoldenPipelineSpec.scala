@@ -123,7 +123,17 @@ class GoldenPipelineSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getLong(4)))
       .toSet
     val counted = m(Engine.mentions(spans, gazetteer))
-    val grouped = m(Engine.mentionRows(spans, gazetteer)
+    // the occurrence stream: one row per AcTrie match, surface normalized
+    val trie = graft.functions.AcTrie(gazetteer)
+    val occurrences = spans.where($"kind" === "text").select("doc_id", "span_idx", "text")
+      .collect().toSeq.flatMap { r =>
+        val text = r.getString(2)
+        trie.matches(text).map { case (b, e, p) =>
+          (r.getString(0), r.getInt(1), text.substring(b, e), trie.typeAt(p)) }
+      }.toDF("doc_id", "span_idx", "raw", "coarse_type")
+      .select($"doc_id", $"span_idx",
+        graft.functions.NormalizeSurface($"raw").as("surface"), $"coarse_type")
+    val grouped = m(occurrences
       .groupBy("doc_id", "span_idx", "surface", "coarse_type")
       .agg(fcount(flit(1)).as("n_occ")))
     assert(counted == grouped && counted.nonEmpty)

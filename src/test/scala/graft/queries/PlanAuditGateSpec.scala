@@ -9,16 +9,16 @@ import org.apache.spark.sql.functions.col
 import graft.SparkSuite
 import graft.kg.{GraphAnalytics, Stages}
 
-/** PlanAudit as a regression GATE, not a dump (VERDICT r5 #6): the
-  * named expectations in graft.PlanAudit's comment block, asserted
-  * programmatically per audited key — a future plan regression fails a
-  * test instead of needing a human to re-read the dumped artifact.
-  * Several audited keys already have dedicated guards in
+/** The plan audit as a regression GATE, not a dump (VERDICT r5 #6):
+  * the named expectations in [[PlanAuditGateSpec.Audited]]'s comments,
+  * asserted programmatically per audited key — a future plan
+  * regression fails a test instead of needing a human to re-read a
+  * dumped plan. Several audited keys already have dedicated guards in
   * [[PlanPropertiesSpec]] (pushdown, pruning, broadcast, topk,
   * vec_ivf_cell, salted shuffle, survivors' broadcast-only corpus
   * joins) — this spec covers the REST of the audited list, and the
   * completeness test at the bottom fails if a key is added to
-  * PlanAudit.Audited without a predicate in either spec. */
+  * `Audited` without a predicate in either spec. */
 class PlanAuditGateSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
@@ -138,8 +138,41 @@ class PlanAuditGateSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       "join_salted", "ann_ivf", "dedup_survivors", "topk")
     val inGraphAnalyticsSpec = Set("graph_comention") // no-pair-self-join guard
     val covered = here ++ inPlanProperties ++ inGraphAnalyticsSpec
-    val missing = graft.PlanAudit.Audited.filterNot(covered)
+    val missing = PlanAuditGateSpec.Audited.filterNot(covered)
     assert(missing.isEmpty,
       s"audited keys without a plan-gate predicate: ${missing.mkString(", ")}")
   }
+}
+
+object PlanAuditGateSpec {
+  /** The audited operator keys, each with the physical plan it should
+    * have. */
+  val Audited: Seq[String] = Seq(
+    "filter_pred",     // expect PushedFilters at the parquet scan
+    "project",         // expect pruned ReadSchema (3 cols of 11)
+    "join_broadcast",  // expect BroadcastHashJoin, no shuffle on fact side
+    "join_salted",     // expect the salted key in the shuffle
+    "agg_hash",        // expect partial+final HashAggregate, WSCG spans
+    "kg_mentions",     // expect Generate(posexplode) inside the scan stage
+    "kg_links",        // expect ONE broadcast candidate-list join, in-row argmax, no shuffle
+    "ann_bruteforce",  // expect broadcast of the 1-row query side
+    "ann_lsh_batch",   // expect ONE equi-join on bucket + window rank
+    "dedup_minhash_pairs", // expect band equi-join, no cartesian
+    "dedup_simhash_pairs", // expect multi-table key equi-join, no cartesian
+    "ann_lsh_probe",   // expect probe-side explode, still ONE equi-join
+    "ann_recall",      // expect bucketed approx side + (query-sample × corpus) exact side
+    "ann_ivf",         // expect cell equi-join against broadcast 1-row query, top-k,
+                       //   vec_ivf_cell assignment (codegen, broadcast centroids — r5)
+    "ann_ivf_probe",   // expect query-side explode of vec_ivf_probes, ONE cell equi-join
+    "dedup_survivors", // expect corpus-side broadcast anti/left joins vs dup-graph tables (r5)
+    "kg_triples",      // expect broadcast canon join, ONE corpus scan, NO media join (r4)
+    "graph_comention", // expect two-level in-row pair explode + window over the
+                       //   memoized triple table — no pair SELF-join (the canon
+                       //   broadcast join belongs to the triple chain and is
+                       //   expected; ADVICE r5)
+    "graph_pagerank",  // expect a LocalTableScan and no shuffle: the dictionary-sized
+                       //   graph ranks on the driver; forced distributed, ranks read
+                       //   from the round-truncated checkpoint (RDDScan)
+    "graph_triangles", // expect InMemory mutual-edge reuse on all three legs (r5)
+    "topk")            // expect TakeOrderedAndProject, not global sort
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.SparkSuite
 
@@ -56,31 +56,77 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.manifests().last == m)
   }
 
+  test("manifests in the hand-rolled renderer's format parse unchanged and render back byte-identical") {
+    val (store, dir) = freshStore()
+    // each literal is what the store wrote before its codec was
+    // Jackson: every field set, with ']' in paths, quotes, backslashes
+    // and negative metrics; a tab marker as a \u0009 escape; a
+    // manifest without schema/files/replaces; other control chars, DEL
+    // and non-ASCII text
+    val cases = Seq(
+      "{\"id\":1,\"dir\":\"/data/run[2026]/part-t\\\"q\\\\x\",\"stage\":\"st\\\"age\\\\\",\"marker\":\"mark\\\"er]\\\\\",\"rows\":12,\"wall_ms\":345,\"schema\":\"k BIGINT,`v]\\\"` STRING,`w\\\\` ARRAY<STRUCT<a: INT>>\",\"hidden\":[\"day\"],\"hidden_exprs\":[\"CAST((ts / 86400) AS BIGINT)\",\"\\\"a\\\\b\\\"\"],\"parts\":[\"p\",\"q\"],\"files\":[\"/data/run[2026]/part-t/p=1/snap-1-a].parquet\",\"/data/x,\\\"y\\\"\\\\z.parquet\"],\"replaces\":[3,4],\"metrics\":{\"b\\\"k\\\\\":-1,\"job_wall_ms\":0,\"max_k\":9,\"min_k\":-7}}" ->
+        store.Manifest(1L, "/data/run[2026]/part-t\"q\\x", "st\"age\\", "mark\"er]\\", 12L, 345L,
+          Map("min_k" -> -7L, "max_k" -> 9L, "b\"k\\" -> -1L, "job_wall_ms" -> 0L),
+          hidden = Seq("day"), parts = Seq("p", "q"),
+          files = Seq("/data/run[2026]/part-t/p=1/snap-1-a].parquet", "/data/x,\"y\"\\z.parquet"),
+          hiddenExprs = Seq("CAST((ts / 86400) AS BIGINT)", "\"a\\b\""), replaces = Seq(3L, 4L),
+          schema = "k BIGINT,`v]\"` STRING,`w\\` ARRAY<STRUCT<a: INT>>"),
+      "{\"id\":2,\"dir\":\"/d/snap-2\",\"stage\":\"s\",\"marker\":\"b\\u00091\",\"rows\":1,\"wall_ms\":2}" ->
+        store.Manifest(2L, "/d/snap-2", "s", "b\t1", 1L, 2L),
+      "{\"id\":3,\"dir\":\"/d/bucket=0\",\"stage\":\"bk\",\"marker\":\"bk-0\",\"rows\":5,\"wall_ms\":6,\"hidden\":[\"day\"],\"hidden_exprs\":[\"x\"],\"metrics\":{\"bucket\":0,\"job_buckets\":3,\"job_wall_ms\":18,\"min_doc\":-3}}" ->
+        store.Manifest(3L, "/d/bucket=0", "bk", "bk-0", 5L, 6L,
+          Map("bucket" -> 0L, "job_buckets" -> 3L, "job_wall_ms" -> 18L, "min_doc" -> -3L),
+          hidden = Seq("day"), hiddenExprs = Seq("x")),
+      "{\"id\":4,\"dir\":\"/d/\u00e9/snap-4\",\"stage\":\"s/t\",\"marker\":\"m\\u0001\\u001f\u007f\\u000b\u00e9\\n\",\"rows\":0,\"wall_ms\":0}" ->
+        store.Manifest(4L, "/d/\u00e9/snap-4", "s/t", "m\u0001\u001f\u007f\u000b\u00e9\n", 0L, 0L))
+    cases.foreach { case (js, m) =>
+      Files.writeString(Paths.get(dir, "_snapshots", s"${m.id}.json"), js)
+    }
+    assert(store.manifests() == cases.map(_._2))
+    assert(store.markers() == cases.map(_._2.marker).toSet)
+    // the old renderer escaped \b \t \f \r as \u00XX, Jackson writes
+    // the short forms; every other byte must come back unchanged
+    cases.foreach { case (js, m) =>
+      rewriteManifest(store, dir)(m)
+      val rendered = Files.readString(Paths.get(dir, "_snapshots", s"${m.id}.json"))
+      if (!Seq("08", "09", "0c", "0d").exists(h => js.contains("\\u00" + h)))
+        assert(rendered == js)
+    }
+    assert(store.manifests() == cases.map(_._2))
+  }
+
+  /** Replaces the committed manifest `<root>/_snapshots/<id>.json`
+    * with `m`. */
+  private def rewriteManifest(store: SnapshotStore, dir: String)(m: store.Manifest): Unit = {
+    Files.delete(Paths.get(dir, "_snapshots", s"${m.id}.json"))
+    store.writeManifest(m)
+  }
+
   /** Reads `stage` through the schema its manifests recorded, then
     * through inference — the same manifests with `schema` stripped, as
     * an older store wrote them. Both must serve the same schema (names,
     * types, nullability, metadata) and rows, and planning the first
     * must start no Spark job. */
-  private def assertRecordedSchemaServesInferred(store: SnapshotStore, stage: String,
+  private def assertRecordedSchemaServesInferred(store: SnapshotStore, dir: String, stage: String,
                                                  keepHidden: Boolean = false): Unit = {
     val ms = store.manifests().filter(_.stage == stage)
     assert(ms.nonEmpty && ms.forall(_.schema.nonEmpty), ms)
     val (recorded, jobs) = jobsStarted(
       store.read(spark, stage = Some(stage), keepHidden = keepHidden))
     assert(jobs == 0, s"$stage: planning the read started $jobs job(s)")
-    ms.foreach(m => store.writeManifest(m.copy(schema = ""), replaceExisting = true))
+    ms.foreach(m => rewriteManifest(store, dir)(m.copy(schema = "")))
     val inferred = store.read(spark, stage = Some(stage), keepHidden = keepHidden)
     assert(recorded.schema == inferred.schema,
       s"$stage:\n${recorded.schema.treeString}\n${inferred.schema.treeString}")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
     assert(rows(recorded) == rows(inferred) && rows(recorded).nonEmpty)
-    ms.foreach(m => store.writeManifest(m, replaceExisting = true))
+    ms.foreach(rewriteManifest(store, dir)(_))
   }
 
   test("reads take the schema from the manifest: same schema and rows as inference, no job") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val (store, _) = freshStore()
+    val (store, dir) = freshStore()
     // flat: nested array/struct/map columns, non-nullable primitives
     // and containers, decimal and timestamp columns; two commits
     def flat(k: Long) = Seq((k, Seq(1, 2), Map("a" -> k), (k.toInt, "s"),
@@ -92,14 +138,14 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(!flat(1L).schema("k").nullable)
     store.commit(flat(1L), "flat", "f1")
     store.commit(flat(2L), "flat", "f2")
-    assertRecordedSchemaServesInferred(store, "flat")
+    assertRecordedSchemaServesInferred(store, dir, "flat")
 
     // commitBuckets, bucket 2 empty: the bucket column stays a path
     val bdf = Seq((1L, "a", 0), (2L, "b", 0), (3L, "c", 1)).toDF("k", "v", "bucket")
     store.commitBuckets(bdf, "bk", "bucket", Seq(0, 1, 2), b => s"bk-$b")
     assert(store.manifests().filter(_.stage == "bk").map(_.schema).toSet ==
       Set("k BIGINT,v STRING"))
-    assertRecordedSchemaServesInferred(store, "bk")
+    assertRecordedSchemaServesInferred(store, dir, "bk")
 
     // partitionBy on a string column whose values look numeric: its
     // type is still inferred from the directory names (as INT) on both
@@ -109,19 +155,19 @@ class SnapshotStoreSpec extends SparkSuite {
     store.commit(pdf, "part", "p2", partitionBy = Seq("p"))
     assert(store.read(spark, stage = Some("part")).schema("p").dataType ==
       org.apache.spark.sql.types.IntegerType)
-    assertRecordedSchemaServesInferred(store, "part")
+    assertRecordedSchemaServesInferred(store, dir, "part")
 
     // hidden partitions, served and dropped; then the compacted stage
     val hidden = Seq("day" -> (col("ts").cast("long") / 86400L).cast("long"))
     Seq((10L, "a"), (86400L * 2, "b")).zipWithIndex.foreach { case (r, i) =>
       store.commit(Seq(r).toDF("ts", "v"), "hid", s"h$i", hiddenPartitions = hidden)
     }
-    assertRecordedSchemaServesInferred(store, "hid", keepHidden = true)
-    assertRecordedSchemaServesInferred(store, "hid")
+    assertRecordedSchemaServesInferred(store, dir, "hid", keepHidden = true)
+    assertRecordedSchemaServesInferred(store, dir, "hid")
     assert(store.compact(spark, "hid").nonEmpty)
-    assertRecordedSchemaServesInferred(store, "hid")
+    assertRecordedSchemaServesInferred(store, dir, "hid")
     assert(store.compact(spark, "part").nonEmpty)
-    assertRecordedSchemaServesInferred(store, "part")
+    assertRecordedSchemaServesInferred(store, dir, "part")
   }
 
   test("reads infer the schema when manifests lack one or disagree") {
@@ -149,7 +195,7 @@ class SnapshotStoreSpec extends SparkSuite {
     val ms = store.manifests().filter(_.stage == "ev")
     assert(ms.map(_.schema).distinct.size == 2 && ms.forall(_.schema.nonEmpty))
     val got = store.read(spark, stage = Some("ev"))
-    ms.foreach(m => store.writeManifest(m.copy(schema = ""), replaceExisting = true))
+    ms.foreach(m => rewriteManifest(store, dir)(m.copy(schema = "")))
     val want = store.read(spark, stage = Some("ev"))
     assert(got.schema == want.schema)
     assert(got.collect().toSeq.sortBy(_.toString) == want.collect().toSeq.sortBy(_.toString))
@@ -405,13 +451,9 @@ class SnapshotStoreSpec extends SparkSuite {
     // pre-r5 manifest (hidden recorded WITHOUT transform SQL): the
     // transform isn't reconstructible — INSERT must still be refused,
     // not silently mislaid
-    val oldDir = java.nio.file.Paths.get(dir, "data", "snap-old")
-    Seq((86410L, "a")).toDF("ts", "v")
-      .withColumn("day", (col("ts") / 86400L).cast("long"))
-      .write.partitionBy("day").parquet(oldDir.toString)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_snapshots", s"${store.latestId.get + 1}.json"),
-      s"""{"id":${store.latestId.get + 1},"dir":"$oldDir","stage":"evold","marker":"mo","rows":1,"wall_ms":1,"hidden":["day"],"metrics":{}}""")
+    store.commit(Seq((86410L, "a")).toDF("ts", "v"), "evold", "mo",
+      hiddenPartitions = Seq("day" -> (col("ts").cast("long") / 86400L).cast("long")))
+    rewriteManifest(store, dir)(store.manifests().last.copy(hiddenExprs = Nil))
     val e = intercept[Exception](
       spark.sql(s"INSERT INTO $cat.evold VALUES (5, 'x')"))
     // must be THE pre-r5 guard, not any incidental failure
@@ -459,28 +501,6 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(e2.getMessage.contains("reserved"), e2.getMessage)
   }
 
-  test("migrateLegacyPartitioned does not count externally-wiped snapshots") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val (store, dir) = freshStore()
-    // hand-write a legacy (pre-file-manifest) partitioned snapshot whose
-    // data dir never existed — the tolerated externally-wiped state
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_snapshots"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_snapshots", "1.json"),
-      s"""{"id":1,"dir":"$dir/data/gone","stage":"w","marker":"m1","rows":1,"wall_ms":1,"hidden":[],"parts":["p"],"files":[],"metrics":{}}""")
-    assert(store.migrateLegacyPartitioned("w") == 0) // nothing relocated
-    // a real legacy snapshot beside it still migrates and counts
-    val oldDir = java.nio.file.Paths.get(dir, "data", "snap-legacy-w")
-    Seq(("a", "p1")).toDF("v", "p").write.partitionBy("p").parquet(oldDir.toString)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_snapshots", "2.json"),
-      s"""{"id":2,"dir":"$oldDir","stage":"w","marker":"m2","rows":1,"wall_ms":1,"hidden":[],"parts":["p"],"files":[],"metrics":{}}""")
-    assert(store.migrateLegacyPartitioned("w") == 1)
-    assert(store.read(spark, stage = Some("w"), marker = Some("m2"))
-      .where(col("p") === "p1").count() == 1)
-  }
-
   test("a duplicate snapshot id fails loudly and never clobbers the committed manifest") {
     import spark.implicits._
     val (store, dir) = freshStore()
@@ -519,23 +539,6 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.read(spark, stage = Some("s")).count() == 2)
   }
 
-  test("migrate skips a legacy dir whose parquet files were wiped") {
-    import spark.implicits._
-    val (store, dir) = freshStore()
-    // healthy file-granular snapshot in the shared tree first
-    store.commit(Seq(("a", "p1")).toDF("v", "p"), "g", "m1", partitionBy = Seq("p"))
-    // legacy manifest whose dir EXISTS but holds no parquet files —
-    // rewriting it would re-classify it over the whole shared tree
-    val hollow = java.nio.file.Paths.get(dir, "data", "snap-hollow")
-    java.nio.file.Files.createDirectories(hollow)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_snapshots", "99.json"),
-      s"""{"id":99,"dir":"$hollow","stage":"g","marker":"mh","rows":1,"wall_ms":1,"hidden":[],"parts":["p"],"files":[],"metrics":{}}""")
-    assert(store.migrateLegacyPartitioned("g") == 0)
-    // the healthy snapshot still serves exactly once (no double-serve)
-    assert(store.read(spark, stage = Some("g"), marker = Some("m1")).count() == 1)
-  }
-
   test("cached store instance survives an external wipe of its directories") {
     import spark.implicits._
     val (store, dir) = freshStore()
@@ -552,71 +555,28 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.read(spark).collect().map(_.getString(1)).toSeq == Seq("b"))
   }
 
-  test("pre-file-manifest partitioned snapshots (legacy layout) still serve their rows") {
+  test("pre-file-manifest partitioned snapshots fail both read surfaces") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val (store, dir) = freshStore()
-    // hand-craft a pre-r4 manifest: partitioned data in its OWN
-    // snap-<id> dir, layout recorded, NO files list — the upgrade must
-    // keep reading it (durable stores survive code upgrades)
-    val legacyDir = java.nio.file.Paths.get(dir, "data", "snap-1")
-    Seq((86410L, "a"), (86400L * 2 + 5, "b")).toDF("ts", "v")
-      .withColumn("day", (col("ts") / 86400L).cast("long"))
-      .write.partitionBy("day").parquet(legacyDir.toString)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_snapshots", "1.json"),
-      s"""{"id":1,"dir":"$legacyDir","stage":"ev","marker":"m1","rows":2,"wall_ms":1,"hidden":["day"],"metrics":{}}""")
-    // plus a NEW-format partitioned commit on the same stage
-    store.commit(Seq((86400L * 3 + 9, "c")).toDF("ts", "v"), "ev", "m2",
-      hiddenPartitions = Seq("day" -> (col("ts") / 86400L).cast("long")))
-    val rd = store.read(spark, stage = Some("ev"))
-    assert(rd.columns.toSet == Set("ts", "v"), rd.columns.toSeq)
-    assert(rd.collect().map(_.getString(1)).toSet == Set("a", "b", "c"))
-    assert(store.read(spark, stage = Some("ev"), asOf = Some(1L)).count() == 2)
-  }
-
-  test("two same-spec legacy partitioned snapshots serve as one SQL scan") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val (store, dir) = freshStore()
-    def legacy(id: Int, rows: Seq[(Long, String)], marker: String): Unit = {
-      val d = java.nio.file.Paths.get(dir, "data", s"snap-$id")
-      rows.toDF("ts", "v").withColumn("day", (col("ts") / 86400L).cast("long"))
-        .write.partitionBy("day").parquet(d.toString)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "_snapshots", s"$id.json"),
-        s"""{"id":$id,"dir":"$d","stage":"ev","marker":"$marker","rows":${rows.size},"wall_ms":1,"hidden":["day"],"metrics":{}}""")
-    }
-    legacy(1, Seq((10L, "a"), (86405L, "b")), "m1")
-    legacy(2, Seq((86400L * 2 + 3, "c")), "m2")
-    // programmatic read always worked: one single-root scan per legacy
-    // dir, unioned (Spark cannot union several partitioned ROOTS in
-    // one scan — re-verified this round: the multi-path form throws
-    // CONFLICTING_DIRECTORY_STRUCTURES even with identical specs)
-    assert(store.read(spark, stage = Some("ev"))
-      .collect().map(_.getString(1)).toSet == Set("a", "b", "c"))
+    // the layout partitioned commits had before file manifests: data in
+    // the snapshot's own snap-<id> dir, layout recorded, no file list
+    val old = Paths.get(dir, "data", "snap-42")
+    val day = (col("ts") / 86400L).cast("long")
+    Seq((86410L, "a")).toDF("ts", "v").withColumn("day", day)
+      .write.partitionBy("day").parquet(old.toString)
+    Files.writeString(Paths.get(dir, "_snapshots", "42.json"),
+      s"""{"id":42,"dir":"$old","stage":"ev","marker":"m42","rows":1,"wall_ms":1,"hidden":["day"]}""")
+    // a file-granular commit beside it must not be served alone
+    store.commit(Seq((86400L * 3 + 9, "c")).toDF("ts", "v"), "ev", "m43",
+      hiddenPartitions = Seq("day" -> day))
+    val e = intercept[IllegalArgumentException](store.read(spark, stage = Some("ev")).collect())
+    assert(e.getMessage.contains("snapshot(s) 42 "), e.getMessage)
     val cat = s"snapl${math.abs(dir.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.root", dir)
-    // SQL: two legacy roots are two incompatible layout groups — the
-    // error must name the upgrade path
-    val e = intercept[IllegalStateException](spark.table(s"$cat.ev").collect())
-    assert(e.getMessage.contains("migrateLegacyPartitioned"), e.getMessage)
-    // the upgrade (ADVICE r4): copy files into the shared hive tree,
-    // atomically rewrite manifests file-granular, drop legacy dirs —
-    // after it the stage is ONE SQL-servable layout group
-    assert(store.migrateLegacyPartitioned("ev") == 2)
-    assert(spark.sql(s"SELECT v FROM $cat.ev")
-      .collect().map(_.getString(0)).toSet == Set("a", "b", "c"))
-    // both surfaces serve the same logical schema (hidden col dropped),
-    // rows survive, and as-of isolation still selects per manifest
-    assert(spark.table(s"$cat.ev").columns.toSeq ===
-      store.read(spark, stage = Some("ev")).columns.toSeq)
-    assert(store.read(spark, stage = Some("ev"))
-      .collect().map(_.getString(1)).toSet == Set("a", "b", "c"))
-    assert(store.read(spark, stage = Some("ev"), asOf = Some(1L)).count() == 2)
-    // idempotent: nothing legacy left to migrate
-    assert(store.migrateLegacyPartitioned("ev") == 0)
+    val e2 = intercept[Exception](spark.table(s"$cat.ev").collect())
+    assert(e2.getMessage.contains("snapshot(s) 42 "), e2.getMessage)
   }
 
   test("partitioned stage: as-of isolation, schema evolution, stats pruning over file manifests") {

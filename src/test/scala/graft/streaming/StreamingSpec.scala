@@ -192,12 +192,11 @@ class StreamingSpec extends SparkSuite {
     val q = StreamOps.streamingMentions(stream, gazSeq)
       .writeStream.outputMode("append").format("memory").queryName("stkg_out").start()
     try q.processAllAvailable() finally q.stop()
-    def counted(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
-        .groupBy(identity).view.mapValues(_.length).toMap
-    val got = counted(spark.table("stkg_out").collect())
-    val want = counted(
-      Engine.mentionRows(Corpus.explodeSpans(docs), gazSeq).collect())
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getLong(4)))
+      .toSeq.sorted
+    val got = rows(spark.table("stkg_out"))
+    val want = rows(Engine.mentions(Corpus.explodeSpans(docs), gazSeq))
     assert(got.nonEmpty && got == want)
   }
 
