@@ -351,11 +351,12 @@ object Dedup {
     * Kiveris large-star/small-star (O(log² n) rounds, one groupBy
     * shuffle per round) when the dup graph is genuinely large. */
   def clusters(pairs: DataFrame): DataFrame = {
-    // CC probes the edge set eagerly several times (size probe, then
-    // either the local collect or the nodes/canon materializations) —
-    // cache the pair plan so the band self-join behind it runs ONCE;
-    // every probe happens inside alternating() (its rounds checkpoint,
-    // its local path collects), so the cache is dropped before return
+    // CC's local path reads the edge set once (the probe's collect),
+    // but its distributed path reads it again for the edge count and
+    // the nodes/canon materializations — cache the pair plan so the
+    // band self-join behind it runs ONCE; every read happens inside
+    // alternating() (its rounds checkpoint, its local path collects),
+    // so the cache is dropped before return
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try ConnectedComponents.alternating(edges)

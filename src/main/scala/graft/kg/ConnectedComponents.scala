@@ -3,22 +3,25 @@ package graft.kg
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Connected components on a Dataset edge table — no RDD/GraphX
   * (BASELINE.json: "no RDD fallback"). Used to canonicalize entities
   * over the redirect/alias graph (SURVEY.md §4.4).
   *
-  * Two implementations:
-  *  - `alternating`: Kiveris et al., "Connected Components in MapReduce
+  * `alternating` takes one of two paths, chosen by the [[localEdges]]
+  * gate it shares with PageRank:
+  *  - at most [[LocalEdgeThreshold]] edges: a driver-side union-find
+  *    over the rows the gate collected, with no count job;
+  *  - larger graphs: Kiveris et al., "Connected Components in MapReduce
   *    and Beyond" (SoCC 2014) large-star/small-star. O(log² n) rounds,
   *    per-round cost O(|E|) with a single groupBy shuffle — this is the
   *    100 TB path (alias graphs with long redirect chains or huge
   *    components still converge in a handful of rounds).
-  *  - `minLabel`: simple min-label propagation, O(diameter) rounds.
-  *    Kept as the differential-testing oracle for `alternating`.
   *
   * Output: (entity_id, canonical_id) for every node appearing in the
   * edge set; canonical_id = lexicographic min of the component.
@@ -65,9 +68,10 @@ object ConnectedComponents {
 
   /** Driver-orchestrated fixpoint loop; each iteration is a fresh job.
     * [[materializeRound]] every round truncates lineage so plans don't
-    * grow exponentially across iterations. Tiny graphs short-circuit to
-    * a driver-local union-find (same output contract, differentially
-    * tested against the distributed path). */
+    * grow exponentially across iterations. Graphs that pass the
+    * [[localEdges]] probe short-circuit to a driver-local union-find
+    * over the probe's rows (same output contract, differentially tested
+    * against the distributed path). */
   def alternating(edgesIn: DataFrame, maxIter: Int = 50,
                   localThreshold: Long = LocalEdgeThreshold): DataFrame = {
     val spark = edgesIn.sparkSession
@@ -80,9 +84,8 @@ object ConnectedComponents {
     val edges0 = edgesIn.select($"src", $"dst")
       .where($"src".isNotNull && $"dst".isNotNull)
 
-    val nEdges = edges0.count()
-    if (nEdges <= localThreshold && localOrdering(edges0).isDefined)
-      return localUnionFind(edges0)
+    val local = localEdges(edges0, localThreshold)
+    if (local.nonEmpty) return localUnionFind(edges0, local.get)
     // The alias graph is dictionary-sized relative to the corpus; a
     // driver-looped fixpoint over it must not pay corpus-grade shuffle
     // widths (32+ tasks per tiny stage dominate wall time). Size the
@@ -92,54 +95,43 @@ object ConnectedComponents {
     // observe a narrowed setting; VERDICT r2 #6).
     val parts = math.max(1, math.min(
       spark.sparkContext.defaultParallelism,
-      (nEdges / 100000L).toInt + 1))
+      (edges0.count() / 100000L).toInt + 1))
     alternatingLoop(edges0, maxIter, parts)
   }
 
-  /** Driver-side ordering matching Spark's: strings compare as UTF-8
-    * bytes unsigned (UTF8String.compareTo — Java String.compareTo
-    * diverges on supplementary characters), integral types compare
-    * numerically. None = type unsupported locally → caller takes the
-    * distributed path, whose least/min handles any orderable type. */
-  private def localOrdering(edges: DataFrame): Option[Ordering[Any]] = {
-    import org.apache.spark.sql.types._
-    val Seq(srcT, dstT) = edges.schema.fields.map(_.dataType).toSeq
-    if (srcT != dstT) return None
-    srcT match {
-      case StringType => Some(new Ordering[Any] {
-        def compare(a: Any, b: Any): Int = {
-          val x = a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val y = b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var i = 0; val n = math.min(x.length, y.length)
-          while (i < n) {
-            val c = (x(i) & 0xff) - (y(i) & 0xff)
-            if (c != 0) return c
-            i += 1
-          }
-          x.length - y.length
-        }
-      })
-      case ByteType | ShortType | IntegerType | LongType => Some(
-        Ordering.by[Any, Long] {
-          case v: java.lang.Byte => v.longValue
-          case v: java.lang.Short => v.longValue
-          case v: java.lang.Integer => v.longValue
-          case v: java.lang.Long => v.longValue
-          case v => throw new IllegalStateException(s"unexpected $v")
-        })
-      case _ => None
-    }
+  private[kg] def integral(t: DataType): Boolean =
+    Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
+
+  /** The one driver-side gate of the graph kernels (CC here, PageRank in
+    * [[GraphAnalytics]]): the rows of `edges`, whose first two columns
+    * are `src` and `dst`, if src and dst share one string or integral
+    * type, there are at most `threshold` rows and none holds a null;
+    * None otherwise, and the caller takes its distributed path. The rows
+    * come from one `limit(threshold + 1).collect()`: a single job where
+    * Spark bounds the plan's rows (a local relation or a range), a few
+    * where its incremental take scales up over the partitions. On those
+    * types Java equality is Spark's grouping and join equality, so a
+    * driver-side kernel over the rows can reproduce the distributed one
+    * exactly. */
+  private[kg] def localEdges(edges: DataFrame, threshold: Long): Option[Array[Row]] = {
+    val Seq(srcT, dstT) = edges.schema.fields.take(2).map(_.dataType).toSeq
+    if (threshold < 0 || srcT != dstT || !(srcT == StringType || integral(srcT))) return None
+    val rows = edges.limit((threshold.min(Int.MaxValue - 1L) + 1).toInt).collect()
+    Option.when(rows.length <= threshold && !rows.exists(_.anyNull))(rows)
   }
 
-  /** Driver-local path-compressed union-find for driver-collectable
-    * graphs; preserves the input id type and orders exactly as the
-    * distributed path does (canonical_id = component min under Spark's
-    * ordering), so the output is independent of which path the edge
-    * count selected (ADVICE r2). */
-  private def localUnionFind(edgesIn: DataFrame): DataFrame = {
-    val spark = edgesIn.sparkSession
-    implicit val ord: Ordering[Any] = localOrdering(edgesIn).get
-    val edges = edgesIn.collect().map(r => (r.get(0), r.get(1)))
+  /** Driver-local path-compressed union-find over [[localEdges]]' rows;
+    * preserves the input id type and orders exactly as the distributed
+    * path's least/min does (canonical_id = component min), so the output
+    * is independent of which path the gate selected (ADVICE r2). Strings
+    * order by `UTF8String.compareTo`, Spark's own string order (UTF-8
+    * bytes unsigned; Java's `String.compareTo` diverges on supplementary
+    * characters); integral ids order numerically. */
+  private def localUnionFind(edges: DataFrame, rows: Array[Row]): DataFrame = {
+    val idT = edges.schema.head.dataType
+    implicit val ord: Ordering[Any] =
+      if (idT == StringType) Ordering.by(s => UTF8String.fromString(s.asInstanceOf[String]))
+      else Ordering.by(_.asInstanceOf[Number].longValue)
     val parent = mutable.HashMap.empty[Any, Any]
     def find(x0: Any): Any = {
       var x = x0
@@ -150,7 +142,8 @@ object ConnectedComponents {
       }
       x
     }
-    edges.foreach { case (a, b) =>
+    rows.foreach { r =>
+      val a = r.get(0); val b = r.get(1)
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val ra = find(a); val rb = find(b)
       if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
@@ -158,16 +151,13 @@ object ConnectedComponents {
     // roots chosen as union-by-min above; one more sweep guarantees the
     // component min even across merge orders
     val byRoot = parent.keys.toSeq.groupBy(find)
-    val rows = byRoot.iterator.flatMap { case (_, members) =>
+    val labels = byRoot.iterator.flatMap { case (_, members) =>
       val m = members.min
-      members.iterator.map(n => org.apache.spark.sql.Row(n, m))
+      members.iterator.map(n => Row(n, m))
     }.toSeq
-    val idT = edgesIn.schema.fields.head.dataType
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](rows.asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("entity_id", idT, nullable = false),
-        org.apache.spark.sql.types.StructField("canonical_id", idT, nullable = false))))
+    edges.sparkSession.createDataFrame(labels.asJava, StructType(Seq(
+      StructField("entity_id", idT, nullable = false),
+      StructField("canonical_id", idT, nullable = false))))
   }
 
   private def alternatingLoop(edgesIn: DataFrame, maxIter: Int,
@@ -236,32 +226,5 @@ object ConnectedComponents {
     nodes.join(labels, $"n" === $"entity_id", "left")
       .select($"n".as("entity_id"),
         coalesce($"canonical_id", $"n").as("canonical_id"))
-  }
-
-  /** Min-label propagation oracle: O(diameter) rounds. */
-  def minLabel(edgesIn: DataFrame, maxIter: Int = 100): DataFrame = {
-    val spark = edgesIn.sparkSession
-    import spark.implicits._
-    val und = edgesIn.select($"src".as("a"), $"dst".as("b"))
-      .union(edgesIn.select($"dst".as("a"), $"src".as("b")))
-      .where($"a" =!= $"b").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = materializeRound(und.select($"a".as("n")).distinct()
-      .select($"n", $"n".as("label")))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val prop = und.join(labels, $"b" === $"n")
-        .groupBy($"a").agg(min($"label").as("nl"))
-      val next = materializeRound(
-        labels.join(prop, $"n" === $"a", "left")
-          .select($"n", least($"label", coalesce($"nl", $"label")).as("label")))
-      changed = next.as("x").join(labels.as("y"), $"x.n" === $"y.n")
-        .where($"x.label" =!= $"y.label").count()
-      labels = next
-      iter += 1
-    }
-    und.unpersist()
-    labels.select($"n".as("entity_id"), $"label".as("canonical_id"))
   }
 }

@@ -134,10 +134,10 @@ object GraphAnalytics {
     * duplicate edge rows count in the out-degree; contributions to a
     * dst that is not a source are dropped.
     *
-    * Driver-local gate: the edges are taken in ONE job,
-    * `limit(localThreshold + 1)`. At most `localThreshold` rows (default
-    * [[ConnectedComponents.LocalEdgeThreshold]]) with string or integral
-    * ids, integral weights, no nulls and ANSI mode on are ranked on the
+    * Driver-local gate: [[ConnectedComponents.localEdges]], the probe CC
+    * shares, plus integral weights and ANSI mode on. Edge sets that pass
+    * (at most `localThreshold` rows, default
+    * [[ConnectedComponents.LocalEdgeThreshold]]) are ranked on the
     * driver into a local relation; anything else runs the distributed
     * loop. The local path is bit-exact by construction: it evaluates the
     * same BIGINT expressions in the same integral types, Java's `/`
@@ -177,7 +177,11 @@ object GraphAnalytics {
                        localThreshold: Long, weighted: Boolean): DataFrame = {
     require(iters >= 1, s"pagerank: iters must be >= 1, got $iters")
     val e = edges.select((Seq("src", "dst") ++ Option.when(weighted)("weight")).map(col): _*)
-    localEdges(e, localThreshold) match {
+    // beyond the shared gate, the driver mirrors Spark's arithmetic only
+    // on integral weights, and its checked arithmetic only under ANSI
+    val mirrors = (!weighted || ConnectedComponents.integral(e.schema(2).dataType)) &&
+      e.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+    (if (mirrors) ConnectedComponents.localEdges(e, localThreshold) else None) match {
       case Some(rows) => localRank(e, rows, iters, weighted)
       case None =>
         val (outMass, k, contrib) =
@@ -206,18 +210,6 @@ object GraphAnalytics {
         if (releaseInputs) Seq(e0, ed, nodes).foreach(_.unpersist(blocking = false))
         pr
     }
-  }
-
-  /** The edge rows, if the driver can mirror Spark's arithmetic and
-    * equality on them exactly (see [[pagerankInt]]); None otherwise. */
-  private def localEdges(e: DataFrame, threshold: Long): Option[Array[Row]] = {
-    val Seq(srcT, dstT, weightT @ _*) = e.schema.fields.map(_.dataType).toSeq
-    def integral(t: DataType) = Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
-    if (threshold < 0 || srcT != dstT || !(srcT == StringType || integral(srcT)) ||
-        !weightT.forall(integral) ||
-        !e.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean) return None
-    val rows = e.limit((threshold.min(Int.MaxValue - 1L) + 1).toInt).collect()
-    Option.when(rows.length <= threshold && !rows.exists(_.anyNull))(rows)
   }
 
   /** [[pagerank]] on the driver, over the collected edge rows. */

@@ -46,9 +46,9 @@ object Stages {
     * every dictionary-derived frame (anchor dict, alias edges) used to
     * embed the full corpus scan + hash agg + top-K subtree of
     * [[gazetteer]] in its OWN plan, so one `Stages.triples` call
-    * re-derived the gazetteer from the corpus up to four times (the
-    * trie collect, the anchor broadcast build, and the CC fixpoint's
-    * count + collect probes over the alias edges). The stages that
+    * re-derived the gazetteer from the corpus once per eager read (the
+    * trie collect, the anchor broadcast build, and CC's local-graph
+    * probe over the alias edges). The stages that
     * already hold the collected 30-row seq now rebuild the surface
     * frame locally — same 30 rows, bit-identical downstream results,
     * corpus scanned once per invocation for the gazetteer. The schema
@@ -109,10 +109,10 @@ object Stages {
   }
 
   /** Redirect/alias edges bound to the derived gazetteer — local
-    * surface relation for the same reason as [[anchorDict]]: the CC
-    * fixpoint probes this frame eagerly (edge count, then the local
-    * union-find collect), and each probe used to re-run the corpus
-    * gazetteer derivation behind it. */
+    * surface relation for the same reason as [[anchorDict]]: CC reads
+    * this frame eagerly (the local-graph probe's collect, and on the
+    * distributed path the edge count and rounds), and each read used to
+    * re-run the corpus gazetteer derivation behind it. */
   def aliasEdges(spark: SparkSession, dir: String): DataFrame =
     aliasEdgesLocal(spark, gazetteerSeq(spark, dir).map(_._1))
 

@@ -4,8 +4,9 @@ import scala.util.Random
 
 import graft.SparkSuite
 
-/** Differential test (SURVEY.md §5.2): both Dataset CC implementations
-  * vs a union-find oracle on seeded random graphs, including chains
+/** Differential test (SURVEY.md §5.2): both paths of the Dataset CC
+  * (driver-local union-find and the forced distributed loop) vs a
+  * union-find oracle on seeded random graphs, including chains
   * (deep diameter), a super-node (skew), and isolated self-referential
   * shapes; invariance under edge direction and permutation.
   */
@@ -21,7 +22,6 @@ class ConnectedComponentsSpec extends SparkSuite {
       case "alt" => ConnectedComponents.alternating(df) // local union-find fast path
       case "altDist" => // distributed large-star/small-star, forced
         ConnectedComponents.alternating(df, localThreshold = 0L)
-      case _ => ConnectedComponents.minLabel(df)
     }
     out.collect().map(r => r.getString(0) -> r.getString(1)).toMap
   }
@@ -37,14 +37,6 @@ class ConnectedComponentsSpec extends SparkSuite {
       val edges = randomGraph(rnd, 25, 30)
       assert(run("alt", edges) == ufComponents(edges), s"round $round: $edges")
       assert(run("altDist", edges) == ufComponents(edges), s"round $round dist: $edges")
-    }
-  }
-
-  test("minLabel ≡ union-find on random graphs") {
-    val rnd = new Random(123L)
-    for (round <- 0 until 3) {
-      val edges = randomGraph(rnd, 20, 25)
-      assert(run("min", edges) == ufComponents(edges), s"round $round")
     }
   }
 
@@ -72,18 +64,39 @@ class ConnectedComponentsSpec extends SparkSuite {
 
   test("local and distributed paths agree on LONG ids (type + ordering)") {
     import spark.implicits._
+    // both paths' labels, after checking they agree and keep the id type
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Any, Any] = {
+      val idT = df.schema("src").dataType
+      val Seq(local, dist) = Seq(ConnectedComponents.LocalEdgeThreshold, 0L)
+        .map(t => ConnectedComponents.alternating(df, localThreshold = t))
+      for (out <- Seq(local, dist)) assert(out.schema.map(_.dataType) == Seq(idT, idT))
+      val Seq(l, d) = Seq(local, dist).map(_.collect().map(r => r.get(0) -> r.get(1)).toMap)
+      assert(l == d, df.schema.simpleString)
+      l
+    }
     // {9, 10} in one component: numeric min = 9, but a string-casting
-    // local path would pick "10" (lexicographic) — ADVICE r2. Also
-    // checks the output schema keeps LongType on both paths.
-    val df = Seq((10L, 9L), (9L, 11L), (3L, 2L)).toDF("src", "dst")
-    val local = ConnectedComponents.alternating(df)
-    val dist = ConnectedComponents.alternating(df, localThreshold = 0L)
-    assert(local.schema("entity_id").dataType == org.apache.spark.sql.types.LongType)
-    assert(dist.schema("entity_id").dataType == org.apache.spark.sql.types.LongType)
-    def m(x: org.apache.spark.sql.DataFrame) =
-      x.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m(local) == m(dist))
-    assert(m(local)(10L) == 9L && m(local)(11L) == 9L && m(local)(3L) == 2L)
+    // local path would pick "10" (lexicographic) — ADVICE r2
+    assert(labels(Seq((10L, 9L), (9L, 11L), (3L, 2L)).toDF("src", "dst")) ==
+      Map(10L -> 9L, 9L -> 9L, 11L -> 9L, 3L -> 2L, 2L -> 2L))
+    assert(labels(Seq((10, 9), (9, 11), (3, 2)).toDF("src", "dst")) ==
+      Map(10 -> 9, 9 -> 9, 11 -> 9, 3 -> 2, 2 -> 2))
+    // U+1D538 is the surrogate pair D835 DD38: Java's String.compareTo
+    // puts it below U+E000, but its UTF-8 bytes (F0 9D 94 B8) sort above
+    // U+E000's (EE 80 80), and Spark's min follows the bytes
+    val (hi, lo) = ("\uD835\uDD38", "\uE000")
+    assert(labels(Seq((hi, lo)).toDF("src", "dst")) == Map(hi -> lo, lo -> lo))
+  }
+
+  test("the local path reads the edges in one Spark job") {
+    import spark.implicits._
+    // a range needs a job to compute, unlike a local relation; the
+    // edges i+1 → i/2 join 0..200 into one tree
+    val edges = spark.range(0, 200)
+      .select(($"id" + 1).as("src"), ($"id" / 2).cast("long").as("dst"))
+    val (out, jobs) = jobsStarted(ConnectedComponents.alternating(edges))
+    assert(jobs == 1)
+    val got = out.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(got.length == 201 && got.forall(_._2 == 0L))
   }
 
   test("null endpoints are dropped identically on both paths") {

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.sources.SnapshotStore
 
-/** Structured Streaming semantics (SURVEY.md §5.6): replay out-of-order
-  * parquet micro-batches with processAllAvailable; memory sink for
-  * windowed aggregations; late-data drop asserted explicitly (ST5).
+/** Structured Streaming semantics (SURVEY.md §5.6): replay parquet
+  * micro-batches with processAllAvailable; the streamed KG stages must
+  * equal the batch operators, and the snapshot sink must commit each
+  * batch exactly once.
   */
 class StreamingSpec extends SparkSuite {
   import spark.implicits._
@@ -32,149 +33,6 @@ class StreamingSpec extends SparkSuite {
     val part = new java.io.File(tmp).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     Files.move(part.toPath, java.nio.file.Paths.get(dir, s"$name.parquet"))
-  }
-
-  test("ST1+ST5: tumbling window counts emit on watermark; late rows dropped") {
-    val in = Files.createTempDirectory("st1-in").toString
-    val sinkName = "st1_out"
-
-    // batch 1: three events in window [10:00,10:05), one in [10:05,10:10)
-    writeBatch(in, eventRows(Seq(
-      (1L, ts(1), 1L, "a", 1.0), (2L, ts(2), 1L, "a", 1.0),
-      (3L, ts(3), 2L, "b", 1.0), (4L, ts(6), 1L, "a", 1.0))), "1")
-
-    val q = StreamOps.tumblingCounts(StreamOps.source(spark, in))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(sinkName).start()
-    try {
-      q.processAllAvailable()
-      // batch 2: flush event far in the future — advances the watermark
-      // past both open windows, so they are finalized and emitted.
-      writeBatch(in, eventRows(Seq((5L, ts(59), 3L, "flush", 1.0))), "2")
-      q.processAllAvailable()
-      // batch 3: a LATE event for the already-closed first window — now
-      // strictly below the watermark (10:49) → must be dropped (ST5).
-      writeBatch(in, eventRows(Seq(
-        (6L, ts(1, 30), 1L, "a", 1.0),
-        (7L, ts(59, 30), 3L, "flush2", 1.0))), "3")
-      q.processAllAvailable()
-
-      val rows = spark.table(sinkName).collect()
-        .map(r => ((r.getTimestamp(0), r.getString(1)), r.getLong(2))).toSeq
-      val firstWin = rows.filter(_._1 == ((ts(0), "a")))
-      assert(firstWin == Seq(((ts(0), "a"), 2L)),
-        s"late row must not count, once-only emission: $rows")
-      assert(rows.contains(((ts(0), "b"), 1L)))
-      assert(rows.contains(((ts(5), "a"), 1L)))
-    } finally q.stop()
-  }
-
-  test("ST2: sliding windows overlap correctly") {
-    val in = Files.createTempDirectory("st2-in").toString
-    writeBatch(in, eventRows(Seq(
-      (1L, ts(1), 1L, "a", 2.0), (2L, ts(7), 1L, "a", 3.0))), "1")
-    val q = StreamOps.slidingSums(StreamOps.source(spark, in))
-      .writeStream.outputMode("append").format("memory").queryName("st2_out").start()
-    try {
-      q.processAllAvailable()
-      writeBatch(in, eventRows(Seq((3L, ts(58), 2L, "f", 0.0))), "2")
-      q.processAllAvailable()
-      val out = spark.table("st2_out").collect()
-        .map(r => (r.getTimestamp(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      // width 10m, slide 2m: event @10:01 lands in starts 9:52..10:00,
-      // event @10:07 in starts 9:58..10:06; they overlap in [9:58,10:08)
-      // and [10:00,10:10).
-      assert(out((Timestamp.valueOf("2024-01-01 09:54:00"), 1L)) == 2.0)
-      assert(out((Timestamp.valueOf("2024-01-01 09:58:00"), 1L)) == 5.0)
-      assert(out((ts(0), 1L)) == 5.0)
-      assert(out((ts(6), 1L)) == 3.0)
-    } finally q.stop()
-  }
-
-  test("ST3: session windows split on the gap") {
-    val in = Files.createTempDirectory("st3-in").toString
-    // two bursts for user 1 separated by > 5 minutes → two sessions
-    writeBatch(in, eventRows(Seq(
-      (1L, ts(1), 1L, "a", 1.0), (2L, ts(2), 1L, "a", 1.0),
-      (3L, ts(20), 1L, "a", 1.0))), "1")
-    val q = StreamOps.sessionCounts(StreamOps.source(spark, in))
-      .writeStream.outputMode("append").format("memory").queryName("st3_out").start()
-    try {
-      q.processAllAvailable()
-      writeBatch(in, eventRows(Seq((4L, ts(59), 2L, "f", 0.0))), "2")
-      q.processAllAvailable()
-      val out = spark.table("st3_out").collect()
-        .map(r => (r.getTimestamp(0), r.getLong(1)) -> r.getLong(2)).toMap
-      assert(out((ts(1), 1L)) == 2L)
-      assert(out((ts(20), 1L)) == 1L)
-    } finally q.stop()
-  }
-
-  test("ST4: stateful per-user running aggregates across micro-batches") {
-    val in = Files.createTempDirectory("st4-in").toString
-    writeBatch(in, eventRows(Seq(
-      (1L, ts(1), 1L, "a", 10.0), (2L, ts(2), 2L, "a", 5.0))), "1")
-    val q = StreamOps.statefulUserCounts(spark, StreamOps.source(spark, in))
-      .writeStream.outputMode("update").format("memory").queryName("st4_out").start()
-    try {
-      q.processAllAvailable()
-      writeBatch(in, eventRows(Seq((3L, ts(3), 1L, "a", 7.0))), "2")
-      q.processAllAvailable()
-      val rows = spark.table("st4_out").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      // last update for user 1 must show the accumulated state
-      assert(rows.contains((1L, 2L, 17.0)), rows.mkString(","))
-      assert(rows.contains((2L, 1L, 5.0)))
-    } finally q.stop()
-  }
-
-  test("ST4b: idle user state expires on timeout (remove + no emission)") {
-    import org.apache.spark.sql.streaming.GroupState
-    final class FakeState(var value: Option[(Long, Double)], timedOut: Boolean)
-        extends GroupState[(Long, Double)] {
-      var removed = false
-      var timeoutSet: Option[Long] = None
-      override def exists: Boolean = value.isDefined
-      override def get: (Long, Double) = value.get
-      override def getOption: Option[(Long, Double)] = value
-      override def update(s: (Long, Double)): Unit = value = Some(s)
-      override def remove(): Unit = { removed = true; value = None }
-      override def hasTimedOut: Boolean = timedOut
-      override def setTimeoutDuration(ms: Long): Unit = ()
-      override def setTimeoutDuration(d: String): Unit = ()
-      override def setTimeoutTimestamp(ms: Long): Unit = timeoutSet = Some(ms)
-      override def setTimeoutTimestamp(ms: Long, add: String): Unit = ()
-      override def setTimeoutTimestamp(t: java.sql.Date): Unit = ()
-      override def setTimeoutTimestamp(t: java.sql.Date, add: String): Unit = ()
-      override def getCurrentWatermarkMs(): Long = 1000L
-      override def getCurrentProcessingTimeMs(): Long = 0L
-    }
-
-    // live path: accumulates, re-arms the TTL at watermark + TTL
-    val live = new FakeState(Some((2L, 5.0)), timedOut = false)
-    val out = StreamOps.userAggUpdate(7L,
-      Iterator((ts(1), 7L, 1.0), (ts(2), 7L, 2.0)), live).toSeq
-    assert(out == Seq(StreamOps.UserAgg(7L, 4L, 8.0)))
-    assert(live.value.contains((4L, 8.0)))
-    assert(live.timeoutSet.contains(ts(2).getTime + StreamOps.UserStateTimeoutMs))
-
-    // expiry path: state removed, nothing emitted, TTL not re-armed
-    val idle = new FakeState(Some((9L, 1.0)), timedOut = true)
-    val out2 = StreamOps.userAggUpdate(8L, Iterator.empty, idle).toSeq
-    assert(out2.isEmpty && idle.removed && idle.timeoutSet.isEmpty)
-  }
-
-  test("ST4a: dropDuplicatesWithinWatermark removes replayed event_ids") {
-    val in = Files.createTempDirectory("st4a-in").toString
-    writeBatch(in, eventRows(Seq(
-      (1L, ts(1), 1L, "a", 1.0), (1L, ts(1), 1L, "a", 1.0), // dup in batch
-      (2L, ts(2), 1L, "a", 1.0))), "1")
-    val q = StreamOps.dedupWithinWatermark(StreamOps.source(spark, in))
-      .writeStream.outputMode("append").format("memory").queryName("st4a_out").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("st4a_out").count() == 2)
-    } finally q.stop()
   }
 
   test("ST-KG: streaming mention detection ≡ batch operators, across micro-batches") {
