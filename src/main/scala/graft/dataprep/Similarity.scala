@@ -1,12 +1,11 @@
 package graft.dataprep
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VecIvfCell, VecIvfProbes, VecLshBucket}
-import graft.sources.SnapshotStore
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (task brief): brute-force cosine top-k as the correctness baseline,
@@ -111,11 +110,6 @@ object Similarity {
       .select(col("q_id"), col("vec_id"), col("cos_sim"), col("rn").cast("int").as("rn"))
   }
 
-  /** One count job + [[planesFor]]: the corpus-aware plane count for
-    * callers that don't know their cardinality up front. */
-  def autoPlanes(embeddings: DataFrame, targetBucketPop: Long = 4096L): Int =
-    planesFor(embeddings.count(), targetBucketPop)
-
   /** Corpus-size-aware IVF cell count (mirrors [[planesFor]], VERDICT
     * r4 #2): K = √n — the classic IVF balance point between per-row
     * assignment cost (K·dim multiplies) and per-probe candidate-list
@@ -130,9 +124,6 @@ object Similarity {
     val k = math.round(math.sqrt(math.max(1L, corpusRows).toDouble))
     math.min(1 << 18, math.max(8L, k)).toInt
   }
-
-  /** One count job + [[cellsFor]], symmetric with [[autoPlanes]]. */
-  def autoCells(embeddings: DataFrame): Int = cellsFor(embeddings.count())
 
   /** IVF ANN (the task brief's "IVF … variant as the scale path"): a
     * coarse k-means quantizer partitions the corpus into `cells`
@@ -195,14 +186,10 @@ object Similarity {
 
   /** A TRAINED IVF coarse quantizer decoupled from any one query: the
     * broadcast centroid matrix plus assignment/probe Columns usable
-    * over ANY embedding column. This is the SERVE-path shape a 100 TB
-    * deployment needs: the two k-means passes over the corpus run once
-    * per corpus version ([[trainIvf]]), the dictionary-sized centroid
-    * table is persisted ([[saveIvf]]), and every later query batch
-    * [[loadIvf]]s it and searches WITHOUT retraining. (The oracle keys
-    * `ann_ivf*` train in-query by design — the DuckDB oracle replays
-    * training bit-exactly; this class factors the same trained state
-    * out for reuse, so results are identical by construction.) */
+    * over ANY embedding column, so the corpus and a query frame that is
+    * not part of it assign through the same final centroids. (The
+    * oracle keys `ann_ivf*` train in-query — the DuckDB oracle replays
+    * training bit-exactly.) */
   final class IvfIndex private[dataprep] (
       val cells: Int, bc: Broadcast[Array[Array[Long]]]) {
     /** Nearest-centroid cell id — the corpus-side scan expression. */
@@ -214,7 +201,6 @@ object Similarity {
         s"nprobe=$nprobe must be in [1, $cells]")
       VecIvfProbes(emb, bc, nprobe)
     }
-    private[dataprep] def centroids: Array[Array[Long]] = bc.value
   }
 
   /** Trains the deterministic integer k-means quantizer and returns
@@ -277,57 +263,6 @@ object Similarity {
     }
 
     new IvfIndex(cells, sc.broadcast(cent))
-  }
-
-  /** Persists a trained index's centroid table to a [[SnapshotStore]]
-    * under a content marker (K rows of (cell, mu) — dictionary-sized).
-    * Marker-idempotent like every snapshot commit: re-training the
-    * same corpus version and re-saving under the same marker is a
-    * no-op, so a restarted train job converges to one committed
-    * model. */
-  def saveIvf(spark: SparkSession, index: IvfIndex, store: SnapshotStore,
-              marker: String, stage: String = "ivf_centroids"): Unit = {
-    import spark.implicits._
-    val rows = index.centroids.zipWithIndex.map { case (mu, i) => (i, mu.toSeq) }
-    store.commit(rows.toSeq.toDF("cell", "mu"), stage, s"$stage-$marker"): Unit
-  }
-
-  /** Loads a [[saveIvf]]-persisted index: one dictionary-sized read +
-    * collect + broadcast — no k-means jobs, no corpus scan. The serve
-    * path for query batches arriving after training. */
-  def loadIvf(spark: SparkSession, store: SnapshotStore, marker: String,
-              stage: String = "ivf_centroids"): IvfIndex = {
-    val rows = store.read(spark, stage = Some(stage), marker = Some(s"$stage-$marker"))
-      .select(col("cell"), col("mu")).collect()
-      .map(r => r.getInt(0) -> r.getSeq[Long](1).toArray).sortBy(_._1)
-    require(rows.nonEmpty, s"ivf index '$stage-$marker': no centroid rows")
-    require(rows.map(_._1).toSeq == (0 until rows.length),
-      s"ivf index '$stage-$marker': cell ids must be 0..K-1, got " +
-        rows.map(_._1).mkString(","))
-    // a model whose centroids disagree on dimension is corrupt: the
-    // assignment loop would index past the shorter vectors row by row
-    val dims = rows.map(_._2.length).distinct
-    require(dims.length == 1,
-      s"ivf index '$stage-$marker': centroid dims inconsistent: ${dims.mkString(",")}")
-    new IvfIndex(rows.length, spark.sparkContext.broadcast(rows.map(_._2)))
-  }
-
-  /** Batch IVF search against a PRE-TRAINED index ([[trainIvf]] /
-    * [[loadIvf]]): same plan shape as [[ivfTopKBatch]] — corpus
-    * assignment is a scan-side codegen'd expression, probes explode
-    * query-side, ONE inverted-list equi-join, shared [[rankTopK]]
-    * tail — but the k-means training jobs are gone from the query.
-    * With the same (cells, iters) the results are identical to
-    * [[ivfTopKBatch]] by construction (same centroids). */
-  def ivfTopKBatchWith(index: IvfIndex, corpus: DataFrame, queries: DataFrame,
-                       k: Int = 3, nprobe: Int = 1,
-                       queryRows: Option[Long] = None): DataFrame = {
-    val assigned = corpus.select(col("vec_id"), col("embedding"),
-      index.cellOf(col("embedding")).as("bucket"))
-    val probes = queries
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .withColumn("probe", explode(index.probesOf(col("q_emb"), nprobe)))
-    rankTopK(assigned, probes, k, probeRows = queryRows.map(_ * nprobe))
   }
 
   /** Batch IVF (the training-pipeline shape, symmetric with

@@ -26,14 +26,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * (`StructType.toDDL`): the committed columns minus the partition,
   * hidden and bucket columns, every level nullable. It is recorded only
   * when `StructType.fromDDL` gives back exactly that schema, else it is
-  * empty. A read with no caller schema and no `evolveSchema`, whose
-  * selected manifests all record the same non-empty DDL, hands it to
-  * the parquet reader — Iceberg keeps the schema in table metadata for
-  * the same reason: planning a read opens no data file and starts no
-  * Spark job. Partition columns stay out of it, so Spark still infers
-  * their types from the directory names. Every other read (manifests
-  * without a schema, mixed schemas, `evolveSchema`) infers from the
-  * parquet footers.
+  * empty. A read with no caller schema whose selected manifests all
+  * record the same non-empty DDL hands it to the parquet reader —
+  * Iceberg keeps the schema in table metadata for the same reason:
+  * planning a read opens no data file and starts no Spark job.
+  * Partition columns stay out of it, so Spark still infers their types
+  * from the directory names. Every other read (a manifest without a
+  * schema, snapshots that added columns) merges the parquet footers
+  * and serves the unified schema; older rows read added columns as
+  * null.
   *
   * Commit protocol: write parquet → write manifest to a temp file →
   * `Files.move(..., ATOMIC_MOVE)`. A reader only sees fully-committed
@@ -54,22 +55,22 @@ object SnapshotStore {
   /** One store instance per root within a JVM: `commit` serializes
     * writers on the instance monitor, so ad-hoc construction (the SQL
     * INSERT path constructs per statement) must resolve to the SAME
-    * instance or two same-JVM writers race `latestId` and clobber each
-    * other's snapshot id. Cross-process writers remain governed by the
+    * instance or two same-JVM writers race the next snapshot id and
+    * clobber each other's. Cross-process writers remain governed by the
     * atomic-manifest-rename protocol under the store's single-driver
     * assumption. */
   def forRoot(root: String): SnapshotStore =
     instances.computeIfAbsent(
-      java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString,
-      _ => new SnapshotStore(root))
+      Paths.get(root).toAbsolutePath.normalize.toString, new SnapshotStore(_))
 }
 
 // constructor private: every same-JVM handle on a root MUST be the same
 // instance (forRoot) or commit's monitor serializes nothing
 final class SnapshotStore private (rootStr: String) {
-  private val root: Path = Paths.get(rootStr)
+  private val root: Path = Paths.get(rootStr) // absolute and normalized (forRoot)
   private val snapsDir: Path = root.resolve("_snapshots")
   private val dataDir: Path = root.resolve("data")
+  private val rootPrefix = root.toString + java.io.File.separator
   Files.createDirectories(snapsDir)
   Files.createDirectories(dataDir)
 
@@ -117,16 +118,19 @@ final class SnapshotStore private (rootStr: String) {
 
   /** Empty arrays, an empty metrics map and an empty schema are left
     * out: [[parse]] reads a missing key as empty, and most manifests
-    * record no layout at all. */
+    * record no layout at all. `dir` and `files` under the store root are
+    * written relative to it, so a store moved to another root still
+    * reads and vacuums; [[parse]] resolves them (absolute ones as is). */
   private def render(m: Manifest): String = {
+    def rel(p: String) = p.stripPrefix(rootPrefix) // strings: a path need not map to the fs charset
     val o = SnapshotStore.Json.createObjectNode()
-      .put("id", m.id).put("dir", m.dir).put("stage", m.stage).put("marker", m.marker)
+      .put("id", m.id).put("dir", rel(m.dir)).put("stage", m.stage).put("marker", m.marker)
       .put("rows", m.rows).put("wall_ms", m.wallMs)
     if (m.schema.nonEmpty) o.put("schema", m.schema)
     def arr(key: String, vs: Seq[String]): Unit =
       if (vs.nonEmpty) { val a = o.putArray(key); vs.foreach(a.add(_)) }
     arr("hidden", m.hidden); arr("hidden_exprs", m.hiddenExprs)
-    arr("parts", m.parts); arr("files", m.files)
+    arr("parts", m.parts); arr("files", m.files.map(rel))
     if (m.replaces.nonEmpty) { val a = o.putArray("replaces"); m.replaces.foreach(a.add(_)) }
     if (m.metrics.nonEmpty) {
       val mo = o.putObject("metrics")
@@ -140,11 +144,12 @@ final class SnapshotStore private (rootStr: String) {
     def req(key: String) = Option(n.get(key)).getOrElse(missing(key, f))
     def elems(key: String) = Option(n.get(key)).toSeq.flatMap(_.elements.asScala)
     def strs(key: String) = elems(key).map(_.asText)
-    Manifest(req("id").asLong, req("dir").asText, req("stage").asText,
+    def abs(p: String) = if (new java.io.File(p).isAbsolute) p else rootPrefix + p
+    Manifest(req("id").asLong, abs(req("dir").asText), req("stage").asText,
       req("marker").asText, req("rows").asLong, req("wall_ms").asLong,
       Option(n.get("metrics")).toSeq.flatMap(_.properties.asScala)
         .map(e => e.getKey -> e.getValue.asLong).toMap,
-      strs("hidden"), strs("parts"), strs("files"), strs("hidden_exprs"),
+      strs("hidden"), strs("parts"), strs("files").map(abs), strs("hidden_exprs"),
       elems("replaces").map(_.asLong), Option(n.get("schema")).fold("")(_.asText))
   }
 
@@ -172,8 +177,6 @@ final class SnapshotStore private (rootStr: String) {
       .toSeq
     finally list.close()
   }
-
-  def latestId: Option[Long] = manifests().lastOption.map(_.id)
 
   /** The manifests a data read should serve as of `asOf` (or latest):
     * [[manifests]] minus snapshots superseded by a [[compact]]ion whose
@@ -313,7 +316,6 @@ final class SnapshotStore private (rootStr: String) {
   def commit(df: DataFrame, stage: String, marker: String,
              partitionBy: Seq[String] = Nil,
              metrics: Map[String, Long] = Map.empty,
-             statsCols: Seq[String] = Nil,
              hiddenPartitions: Seq[(String, org.apache.spark.sql.Column)] = Nil,
              replaces: Seq[Long] = Nil): Option[Long] = synchronized {
     // hidden names also become hive dir names — keep them in a safe
@@ -357,31 +359,14 @@ final class SnapshotStore private (rootStr: String) {
     val dir =
       if (partitioned) dataDir.resolve(s".tmp-snap-$id") else dataDir.resolve(s"snap-$id")
     val obs = Observation(s"snap-$id-rows")
-    // Manifest-level column stats (Iceberg manifests carry per-file
-    // min/max; here per-snapshot): observed DURING the write job like
-    // the row count — zero extra passes. `readPruned` uses them to
-    // skip whole snapshots at read-planning time, before any file
-    // listing or footer I/O.
-    // try_cast, not cast: under Spark 4's ANSI default a plain cast
-    // THROWS on non-numeric values — stats must degrade to absent,
-    // never fail the write job
-    val statAggs = statsCols.flatMap { c => Seq(
-      min(col(c).try_cast("long")).as(s"min_$c"),
-      max(col(c).try_cast("long")).as(s"max_$c")) }
     val withHidden = hiddenPartitions.foldLeft(df) {
       case (acc, (n, c)) => acc.withColumn(n, c)
     }
     val partCols = partitionBy ++ hiddenPartitions.map(_._1)
-    val w = withHidden.observe(obs, count(lit(1)).as("rows"), statAggs: _*)
-      .write.mode("overwrite")
+    val w = withHidden.observe(obs, count(lit(1)).as("rows")).write.mode("overwrite")
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
       .parquet(dir.toString)
     val rows = obs.get("rows").asInstanceOf[Long]
-    val statMetrics = statsCols.flatMap { c =>
-      Seq(s"min_$c", s"max_$c").flatMap { k =>
-        Option(obs.get(k)).collect { case v: Long => k -> v } // null on empty input
-      }
-    }.toMap
     val (finalDir, files) =
       if (!partitioned) (dir.toString, Nil)
       else {
@@ -434,7 +419,7 @@ final class SnapshotStore private (rootStr: String) {
         sqls
       } catch { case scala.util.control.NonFatal(_) => Nil }
     writeManifest(Manifest(id, finalDir, stage, marker, rows,
-      (System.nanoTime() - t0) / 1000000L, metrics ++ statMetrics,
+      (System.nanoTime() - t0) / 1000000L, metrics,
       hidden = hiddenPartitions.map(_._1), parts = partitionBy, files = files,
       hiddenExprs = hiddenSql, replaces = replaces,
       schema = recordedSchema(withHidden, partCols)))
@@ -443,7 +428,7 @@ final class SnapshotStore private (rootStr: String) {
 
   /** COMPACTS a stage: rewrites its current LIVE snapshot set as ONE
     * new snapshot (same partition layout, hidden transforms replayed
-    * from their recorded SQL, per-column stats re-derived) that
+    * from their recorded SQL) that
     * `replaces` the originals — Iceberg's rewrite_data_files +
     * manifest rewrite in one step. This is the maintenance operation
     * the streaming sink pattern needs: per-batch commits accumulate
@@ -475,15 +460,8 @@ final class SnapshotStore private (rootStr: String) {
         latest.hidden.zip(latest.hiddenExprs).map { case (n, s) =>
           n -> org.apache.spark.sql.functions.expr(s) }
       }
-    // carry the stats columns forward: a compaction that silently
-    // dropped min/max metrics would turn stats-pruned reads from
-    // skip-at-planning into scan-everything
-    val statCols = live.flatMap(_.metrics.keys)
-      .collect { case k if k.startsWith("min_") => k.stripPrefix("min_") }
-      .distinct
     commit(read(spark, stage = Some(stage)), stage,
-      marker = s"compact-$stage-upto-${latest.id}",
-      partitionBy = latest.parts, statsCols = statCols,
+      marker = s"compact-$stage-upto-${latest.id}", partitionBy = latest.parts,
       hiddenPartitions = hiddenReplay, replaces = live.map(_.id))
   }
 
@@ -637,14 +615,14 @@ final class SnapshotStore private (rootStr: String) {
     }
   }
 
-  /** Layout classification shared by [[read]]/[[readPruned]] and the
-    * V2 catalog (one set of rules, or the SQL surface and the
-    * programmatic one diverge on which snapshots they serve): flat
-    * dirs — one multi-path scan — and file groups — one file-list scan
-    * per stage layout root. Zero-row snapshots (marker-only) contribute
-    * nothing. A snapshot with rows and a recorded layout but no file
-    * list (the pre-file-manifest partitioned layout) is neither, so it
-    * fails loudly instead of dropping out of the read. */
+  /** Layout classification shared by [[read]] and the V2 catalog (one
+    * set of rules, or the SQL surface and the programmatic one diverge
+    * on which snapshots they serve): flat dirs — one multi-path scan —
+    * and file groups — one file-list scan per stage layout root.
+    * Zero-row snapshots (marker-only) contribute nothing. A snapshot
+    * with rows and a recorded layout but no file list (the
+    * pre-file-manifest partitioned layout) is neither, so it fails
+    * loudly instead of dropping out of the read. */
   private[sources] def layoutGroups(ms: Seq[Manifest])
       : (Seq[String], Seq[(String, Seq[Manifest])]) = {
     val unlisted = ms.filter(m =>
@@ -658,49 +636,36 @@ final class SnapshotStore private (rootStr: String) {
     (flatDirs, ms.filter(_.files.nonEmpty).groupBy(_.dir).toSeq.sortBy(_._1))
   }
 
-  /** Source frames for a selected manifest set (see [[layoutGroups]];
-    * `basePath` on file groups restores partition columns and
-    * dir-level pruning — [[Manifest.files]]). */
-  private def sourceFrames(spark: SparkSession, ms: Seq[Manifest],
-                           schema: Option[StructType],
-                           evolveSchema: Boolean): Seq[DataFrame] = {
-    // the schema every selected manifest recorded at commit spares the
-    // footer-inference job (see the layout note on [[SnapshotStore]])
-    val recorded = ms.map(_.schema).distinct match {
-      case Seq(ddl) if ddl.nonEmpty && !evolveSchema => Some(StructType.fromDDL(ddl))
+  /** The schema rule shared by [[read]] and the V2 catalog: the data
+    * schema every manifest in `ms` records, served with no inference
+    * job; None when one records none or they disagree (a later commit
+    * added columns), and the reader then merges the parquet footers
+    * (see the layout note on [[SnapshotStore]]). */
+  private[sources] def agreedSchema(ms: Seq[Manifest]): Option[StructType] =
+    ms.map(_.schema).distinct match {
+      case Seq(ddl) if ddl.nonEmpty => Some(StructType.fromDDL(ddl))
       case _ => None
     }
-    def reader() = {
-      val rd0 = schema.orElse(recorded).map(spark.read.schema).getOrElse(spark.read)
-      if (evolveSchema) rd0.option("mergeSchema", "true") else rd0
-    }
-    val (flatDirs, fileGroups) = layoutGroups(ms)
-    (if (flatDirs.nonEmpty) Seq(reader().parquet(flatDirs: _*)) else Nil) ++
-      fileGroups.map { case (layoutRoot, group) =>
-        reader().option("basePath", layoutRoot).parquet(group.flatMap(_.files): _*)
-      }
-  }
 
-  /** Read the table as of snapshot `asOf` (inclusive), or latest.
-    * Flat snapshots are one multi-path scan; partitioned snapshots are
-    * file-list scans over their stage's shared hive tree (dir-based
-    * discovery cannot union several partitioned roots). Mixed layouts
-    * combine via unionByName.
+  /** Read the table as of snapshot `asOf` (inclusive), or latest, and
+    * optionally only one `stage`. Flat snapshots are one multi-path
+    * scan; partitioned snapshots are file-list scans over their stage's
+    * shared hive tree (dir-based discovery cannot union several
+    * partitioned roots; `basePath` restores the partition columns and
+    * dir-level pruning). Mixed layouts combine via unionByName.
     *
-    * `evolveSchema` = Iceberg-style additive schema evolution: when
-    * later commits added columns, merge footers across snapshots so the
-    * unified schema is served (older rows read the new columns as
-    * null; across layout groups, missing columns are tolerated too).
-    * Opt-in because the footer-merge pass costs O(files) at
-    * read-planning time — a table known to have one schema should not
-    * pay it. */
-  /** `marker`: select exactly the snapshot(s) committed under that
+    * The schema is the caller's `schema`, else the one the selected
+    * manifests agree on ([[agreedSchema]]), else the merge of the
+    * parquet footers: a stage whose later commits added columns serves
+    * the unified schema, older rows read them as null, and layout
+    * groups missing a column union with it null-filled.
+    *
+    * `marker`: select exactly the snapshot(s) committed under that
     * idempotence marker — the read half of marker-keyed resume (a
     * stage shared by several corpora/runs serves ONLY the requested
     * run's snapshot, not the union; see Dedup's sketch resume). */
   def read(spark: SparkSession, schema: Option[StructType] = None,
            asOf: Option[Long] = None, stage: Option[String] = None,
-           evolveSchema: Boolean = false,
            keepHidden: Boolean = false,
            marker: Option[String] = None): DataFrame = {
     // a marker read is a RESUME read of one specific commit — it must
@@ -728,57 +693,22 @@ final class SnapshotStore private (rootStr: String) {
       s"snapshot(s) ${gone.map(_.id).mkString(",")} in $root committed rows but " +
         "have no surviving data (expired or externally wiped) — refusing to " +
         s"serve a partial union (asOf=$asOf, stage=$stage, marker=$marker)")
-    val frames = sourceFrames(spark, ms, schema, evolveSchema)
+    val served = schema.orElse(agreedSchema(ms))
+    def reader() = served.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema)
+    val (flatDirs, fileGroups) = layoutGroups(ms)
+    val frames = (if (flatDirs.nonEmpty) Seq(reader().parquet(flatDirs: _*)) else Nil) ++
+      fileGroups.map { case (layoutRoot, group) =>
+        reader().option("basePath", layoutRoot).parquet(group.flatMap(_.files): _*)
+      }
     require(frames.nonEmpty,
       s"all selected snapshots in $root are empty (asOf=$asOf, stage=$stage)")
-    val df = frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = evolveSchema))
+    val df = frames.reduce(_.unionByName(_, allowMissingColumns = served.isEmpty))
     // hidden partition transforms are a LAYOUT property, not data —
     // serve the original schema unless the caller opts in (e.g. to
     // partition-filter before the scan; the filter then prunes hive
     // dirs exactly as a visible partition column would)
     val hiddenCols = ms.flatMap(_.hidden).distinct
     if (keepHidden || hiddenCols.isEmpty) df else df.drop(hiddenCols: _*)
-  }
-
-  /** Stats-pruned read: like [[read]], but snapshots whose
-    * manifest-level [min_col, max_col] range (recorded by
-    * `commit(statsCols = ...)`) cannot intersect [lo, hi] are skipped
-    * at PLANNING time — no file listing, no footer I/O, no tasks for
-    * pruned snapshots, the same planning-time skip an Iceberg manifest
-    * scan performs. Snapshots without stats for `column` are kept
-    * (conservative: pruning must never change results); the returned
-    * frame still carries the row-level predicate so surviving files
-    * filter as usual. */
-  def readPruned(spark: SparkSession, column: String, lo: Long, hi: Long,
-                 stage: Option[String] = None,
-                 asOf: Option[Long] = None): DataFrame = {
-    val ms = liveManifests(asOf)
-      .filter(m => stage.forall(m.stage == _))
-    require(ms.nonEmpty, s"no snapshots in $root (asOf=$asOf, stage=$stage)")
-    val kept = ms.filter { m =>
-      (m.metrics.get(s"min_$column"), m.metrics.get(s"max_$column")) match {
-        case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
-        case _ => true
-      }
-    }
-    val frames = sourceFrames(spark, kept, None, evolveSchema = false)
-    if (frames.isEmpty) {
-      // all snapshots pruned (or empty): an empty frame with the
-      // table's schema, from ANY selected snapshot's footer — with
-      // the SAME hidden-layout-column drop as the non-empty branch,
-      // so the result schema does not depend on whether pruning
-      // eliminated everything (ADVICE r3)
-      val any = sourceFrames(spark, ms, None, evolveSchema = false)
-      require(any.nonEmpty, s"all selected snapshots in $root are empty")
-      val empty = any.head.where(lit(false))
-      val hid = ms.flatMap(_.hidden).distinct
-      return if (hid.isEmpty) empty else empty.drop(hid: _*)
-    }
-    val df = frames.reduce(_.unionByName(_))
-      .where(col(column).try_cast("long").between(lo, hi))
-    // same hidden-layout contract as read(): transforms never surface
-    val hiddenCols = kept.flatMap(_.hidden).distinct
-    if (hiddenCols.isEmpty) df else df.drop(hiddenCols: _*)
   }
 
   /** Lineage table: one row per snapshot (SURVEY.md §1.3). */

@@ -357,66 +357,22 @@ class SimilaritySpec extends SparkSuite {
     assert(h4.values.forall(_ == 3L), h4.toString)
   }
 
-  test("IVF train/serve split: a persisted index serves identical results without retraining") {
-    val queries = emb.where(col("vec_id") % 40 === 0)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-
-    // train once, persist the dictionary-sized centroid table, load it
-    // back — the serve path must reproduce the train-in-query results
-    // exactly (same centroids by construction)
-    val idx = Similarity.trainIvf(emb, cells = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-index").toString
-    val store = graft.sources.SnapshotStore.forRoot(dir)
-    Similarity.saveIvf(spark, idx, store, "corpus-v1")
-    val loaded = Similarity.loadIvf(spark, store, "corpus-v1")
-    assert(loaded.cells == idx.cells)
-    assert(loaded.centroids.map(_.toSeq).toSeq == idx.centroids.map(_.toSeq).toSeq)
-    val direct = rows(Similarity.ivfTopKBatch(emb, queries,
-      k = 3, cells = 4, iters = 2, nprobe = 2))
-    val served = rows(Similarity.ivfTopKBatchWith(loaded, emb, queries,
-      k = 3, nprobe = 2))
-    assert(served == direct)
-
-    // save is marker-idempotent: a restarted train job re-saving the
-    // same corpus version converges to ONE committed model
-    val n = store.manifests().size
-    Similarity.saveIvf(spark, idx, store, "corpus-v1")
-    assert(store.manifests().size == n)
-
-    // a corrupted persisted model (non-contiguous cell ids) must fail
-    // loudly at load, not silently shift every assignment
-    store.commit(Seq((1, Seq(0L)), (3, Seq(1L))).toDF("cell", "mu"),
-      "ivf_centroids", "ivf_centroids-bad")
-    val e = intercept[IllegalArgumentException](
-      Similarity.loadIvf(spark, store, "bad"))
-    assert(e.getMessage.contains("0..K-1"), e.getMessage)
-
-    // ...and so must ragged centroids (dimension disagreement would
-    // index past the shorter vectors inside the assignment loop)
-    store.commit(Seq((0, Seq(0L, 1L)), (1, Seq(1L))).toDF("cell", "mu"),
-      "ivf_centroids", "ivf_centroids-ragged")
-    val e2 = intercept[IllegalArgumentException](
-      Similarity.loadIvf(spark, store, "ragged"))
-    assert(e2.getMessage.contains("dims inconsistent"), e2.getMessage)
-  }
-
   test("cellsFor scales like sqrt(n) with a broadcastable ceiling") {
     assert(Similarity.cellsFor(10L) == 8) // clamp floor
     assert(Similarity.cellsFor(1000000L) == 1000) // sqrt
     assert(Similarity.cellsFor(1000000000000L) == (1 << 18)) // 10^12 design point hits the ceiling
-    assert(Similarity.autoCells(emb) == 14) // sqrt(200) ≈ 14, one count job
+    assert(Similarity.cellsFor(emb.count()) == 14) // sqrt(200) ≈ 14
   }
 
-  test("autoPlanes wires corpus sizing into the batch ANN path end to end") {
-    val planes = Similarity.autoPlanes(emb, targetBucketPop = 25L) // 200/25 → 8 buckets
+  test("planesFor wires corpus sizing into the batch ANN path end to end") {
+    val planes = Similarity.planesFor(emb.count(), 25L) // 200/25 → 8 buckets
     assert(planes == 4) // clamp floor still binds at fixture size
     val queries = emb.where(col("vec_id") % 40 === 0)
     val rows = Similarity.lshTopKBatchProbe(emb, queries, k = 3, planes = planes)
       .collect()
     assert(rows.nonEmpty)
     // wider corpus constant: sanity that a bigger target shrinks planes
-    assert(Similarity.autoPlanes(emb) == 4)
+    assert(Similarity.planesFor(emb.count()) == 4)
   }
 }
 

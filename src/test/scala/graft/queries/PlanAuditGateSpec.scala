@@ -1,10 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec, SparkPlan}
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.catalyst.expressions.Explode
+import org.apache.spark.sql.execution.{GenerateExec, LocalTableScanExec, RDDScanExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -27,10 +32,13 @@ class PlanAuditGateSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   private def executed(key: String): SparkPlan =
     graft.SparkEntry.queries(key)(spark, sf).queryExecution.executedPlan
 
-  private def plan(key: String): String = executed(key).toString
-
   private def shuffles(p: SparkPlan): Int =
     collect(p) { case s: ShuffleExchangeExec => s }.size
+
+  /** How many nodes of class `T` `p` holds, AQE query stages and
+    * subquery plans included (the parts `p.toString` prints). */
+  private def nodes[T <: SparkPlan](p: SparkPlan)(implicit t: ClassTag[T]): Int =
+    collectWithSubqueries(p) { case n if t.runtimeClass.isInstance(n) => n }.size
 
   private def count(hay: String, needle: String): Int =
     needle.r.findAllMatchIn(hay).size
@@ -39,10 +47,10 @@ class PlanAuditGateSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     // WholeStageCodegen markers only appear on executed adaptive plans,
     // so the gate asserts the structural property: a partial_ aggregate
     // BELOW the exchange (map-side combine) and the final one above.
-    val p = plan("agg_hash")
-    assert(count(p, "HashAggregate") >= 2, p.take(900))
-    assert(p.contains("partial_sum"), p.take(900))
-    assert(count(p, "Exchange") == 1, p.take(900))
+    val p = executed("agg_hash")
+    assert(nodes[HashAggregateExec](p) >= 2, p.treeString.take(900))
+    assert(p.toString.contains("partial_sum"), p.treeString.take(900))
+    assert(nodes[Exchange](p) == 1, p.treeString.take(900))
   }
 
   test("kg_mentions: Aho–Corasick Generate over the scan, ZERO exchanges") {
@@ -59,50 +67,51 @@ class PlanAuditGateSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   }
 
   test("ann_bruteforce: 1-row query broadcast + TakeOrderedAndProject") {
-    val p = plan("ann_bruteforce")
-    assert(p.contains("BroadcastExchange"), p.take(900))
-    assert(p.contains("TakeOrderedAndProject"), p.take(900))
+    val p = executed("ann_bruteforce")
+    assert(nodes[BroadcastExchangeExec](p) > 0, p.treeString.take(900))
+    assert(nodes[TakeOrderedAndProjectExec](p) > 0, p.treeString.take(900))
   }
 
   test("ann_lsh_batch: bucket equi-join + window rank, no cartesian") {
-    val p = plan("ann_lsh_batch")
-    assert(p.contains("vec_lsh_bucket"), p.take(900))
-    assert(!p.contains("CartesianProduct"), p.take(1200))
-    assert(p.contains("Window"), p.take(900))
+    val p = executed("ann_lsh_batch")
+    assert(p.toString.contains("vec_lsh_bucket"), p.treeString.take(900))
+    assert(nodes[CartesianProductExec](p) == 0, p.treeString.take(1200))
+    assert(nodes[WindowExec](p) > 0, p.treeString.take(900))
   }
 
   test("ann_lsh_probe: query-side probe explode, still an equi-join") {
-    val p = plan("ann_lsh_probe")
-    assert(p.contains("Generate explode"), p.take(1200))
-    assert(!p.contains("CartesianProduct"), p.take(1200))
+    val p = executed("ann_lsh_probe")
+    assert(collectWithSubqueries(p) {
+      case g: GenerateExec if g.generator.isInstanceOf[Explode] => g }.nonEmpty, p.treeString.take(1200))
+    assert(nodes[CartesianProductExec](p) == 0, p.treeString.take(1200))
   }
 
   test("ann_recall: bucketed approx side present (exact side is the documented sample cross)") {
-    val p = plan("ann_recall")
-    assert(p.contains("vec_lsh_bucket"), p.take(1200))
+    val p = executed("ann_recall")
+    assert(p.toString.contains("vec_lsh_bucket"), p.treeString.take(1200))
   }
 
   test("ann_ivf_probe: query-side vec_ivf_probes explode, one cell equi-join") {
-    val p = plan("ann_ivf_probe")
-    assert(p.contains("vec_ivf_probes"), p.take(1200))
-    assert(!p.contains("CartesianProduct"), p.take(1200))
+    val p = executed("ann_ivf_probe")
+    assert(p.toString.contains("vec_ivf_probes"), p.treeString.take(1200))
+    assert(nodes[CartesianProductExec](p) == 0, p.treeString.take(1200))
   }
 
   test("dedup pair stages: band/table equi-joins, never a cartesian product") {
     for (k <- Seq("dedup_minhash_pairs", "dedup_simhash_pairs")) {
-      val p = plan(k)
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-        s"$k pair join degenerated:\n" + p.take(1200))
+      val p = executed(k)
+      assert(nodes[CartesianProductExec](p) == 0 && nodes[BroadcastNestedLoopJoinExec](p) == 0,
+        s"$k pair join degenerated:\n" + p.treeString.take(1200))
     }
   }
 
   test("kg_triples: ONE corpus scan, broadcast canon join, no media join") {
-    val p = plan("kg_triples")
+    val p = executed("kg_triples")
     // the corpus parquet is scanned exactly once (single-scan DAG, r3);
     // dictionary frames are local relations since r6, so documents.parquet
     // is the only file scan left in the whole plan
-    assert(count(p, "documents\\.parquet") == 1, p.take(1500))
-    assert(p.contains("BroadcastHashJoin"), p.take(900))
+    assert(count(p.toString, "documents\\.parquet") == 1, p.treeString.take(1500))
+    assert(nodes[BroadcastHashJoinExec](p) > 0, p.treeString.take(900))
   }
 
   test("graph_pagerank: dictionary-sized graph ranks on the driver, zero shuffles") {

@@ -188,8 +188,8 @@ class SnapshotStoreSpec extends SparkSuite {
       s"""{"id":2,"dir":"$old","stage":"old","marker":"mo","rows":1,"wall_ms":1}""")
     assert(store.read(spark, stage = Some("old")).collect().map(_.getString(1)).toSeq == Seq("e"))
 
-    // two commits with different schemas, evolveSchema off: the read
-    // serves what inference over the same manifests serves
+    // two commits with different schemas: the read merges the footers,
+    // exactly as it does over the same manifests without a schema
     store.commit(Seq((1L, "a")).toDF("k", "v"), "ev", "e1")
     store.commit(Seq((2L, "b", 9.5)).toDF("k", "v", "w"), "ev", "e2")
     val ms = store.manifests().filter(_.stage == "ev")
@@ -234,54 +234,12 @@ class SnapshotStoreSpec extends SparkSuite {
     val (store, _) = freshStore()
     store.commit(Seq((1L, "a")).toDF("k", "v"), "s", "m1")
     store.commit(Seq((2L, "b", 9.5)).toDF("k", "v", "w"), "s", "m2")
-    val evolved = store.read(spark, evolveSchema = true)
+    val evolved = store.read(spark)
     assert(evolved.columns.toSet == Set("k", "v", "w"))
     val byK = evolved.collect().map(r => r.getLong(0) -> r.isNullAt(2)).toMap
     assert(byK(1L) && !byK(2L)) // pre-evolution rows serve null for w
     // time travel still serves the old schema as-of the old snapshot
-    assert(store.read(spark, asOf = Some(1L), evolveSchema = true)
-      .columns.toSet == Set("k", "v"))
-  }
-
-  test("manifest column stats prune whole snapshots at planning time") {
-    import spark.implicits._
-    val (store, _) = freshStore()
-    // three time-ranged commits, like daily ingests
-    store.commit(Seq((10L, "a"), (19L, "b")).toDF("ts", "v"), "s", "d1",
-      statsCols = Seq("ts"))
-    store.commit(Seq((20L, "c"), (29L, "d")).toDF("ts", "v"), "s", "d2",
-      statsCols = Seq("ts"))
-    store.commit(Seq((30L, "e")).toDF("ts", "v"), "s", "d3",
-      statsCols = Seq("ts"))
-    // stats recorded in the manifests (observed during the write job)
-    val m1 = store.manifests().head
-    assert(m1.metrics("min_ts") == 10L && m1.metrics("max_ts") == 19L)
-
-    // planning-time pruning: only the overlapping snapshot's dir is read
-    val pruned = store.readPruned(spark, "ts", 20L, 25L, stage = Some("s"))
-    val scannedDirs = pruned.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.relation.location.rootPaths.map(_.toString)
-    }.flatten
-    assert(scannedDirs.size == 1 && scannedDirs.head.contains("snap-2"))
-    assert(pruned.collect().map(_.getString(1)).toSet == Set("c"))
-
-    // conservative: a snapshot without stats is never pruned away
-    store.commit(Seq((21L, "x")).toDF("ts", "v"), "s", "d4") // no statsCols
-    assert(store.readPruned(spark, "ts", 20L, 25L, stage = Some("s"))
-      .collect().map(_.getString(1)).toSet == Set("c", "x"))
-
-    // fully disjoint range → empty result, correct schema, zero data dirs
-    val none = store.readPruned(spark, "ts", 100L, 200L, stage = Some("s"))
-    assert(none.columns.toSet == Set("ts", "v") && none.count() == 0)
-
-    // non-numeric stat column: ANSI cast would throw mid-write —
-    // try_cast degrades to absent stats, commit + reads still work
-    store.commit(Seq((40L, "w")).toDF("ts", "v"), "s2", "d5",
-      statsCols = Seq("v"))
-    val m5 = store.manifests().last
-    assert(!m5.metrics.contains("min_v") && !m5.metrics.contains("max_v"))
-    assert(store.readPruned(spark, "v", 0L, 10L, stage = Some("s2")).count() == 0)
+    assert(store.read(spark, asOf = Some(1L)).columns.toSet == Set("k", "v"))
   }
 
   test("hidden partitioning: transform laid out + pruned, never served") {
@@ -345,6 +303,31 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(spark.sql(s"SELECT * FROM $cat.ev VERSION AS OF 1").count() == 2)
   }
 
+  test("catalog tables whose manifests agree plan with no job and serve read's schema") {
+    import spark.implicits._
+    val (store, dir) = freshStore()
+    store.commit(Seq((1L, "a", "p1")).toDF("k", "v", "p"), "pt", "m1", partitionBy = Seq("p"))
+    store.commit(Seq((2L, "b", "p2")).toDF("k", "v", "p"), "pt", "m2", partitionBy = Seq("p"))
+    store.commit(Seq((3L, "c")).toDF("k", "v"), "flat", "m3")
+    val cat = s"snapj${math.abs(dir.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", dir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSet
+    for (st <- Seq("pt", "flat")) {
+      val (table, jobs) = jobsStarted(spark.table(s"$cat.$st"))
+      assert(jobs == 0, s"$st: planning the catalog table started $jobs job(s)")
+      val read = store.read(spark, stage = Some(st))
+      assert(table.schema == read.schema, s"$st:\n${table.schema.treeString}\n${read.schema.treeString}")
+      assert(rows(table) == rows(read) && rows(table).nonEmpty)
+    }
+    // a later commit that adds a column: both surfaces merge the footers
+    store.commit(Seq((4L, "d", 9.5)).toDF("k", "v", "w"), "flat", "m4")
+    val merged = spark.table(s"$cat.flat")
+    assert(merged.columns.toSet == Set("k", "v", "w"))
+    assert(merged.schema == store.read(spark, stage = Some("flat")).schema)
+    assert(rows(merged) == rows(store.read(spark, stage = Some("flat"))))
+  }
+
   test("crash-resume exactly-once: data without manifest is invisible; resume completes") {
     import spark.implicits._
     val (store, dir) = freshStore()
@@ -355,7 +338,7 @@ class SnapshotStoreSpec extends SparkSuite {
     val orphan = java.nio.file.Paths.get(dir, "data", "snap-99")
     Seq((99L, "junk")).toDF("k", "v").write.parquet(orphan.toString)
     assert(store.read(spark).count() == 2) // orphan invisible
-    assert(store.latestId == Some(1L))
+    assert(store.manifests().last.id == 1L)
 
     // resume: driver consults markers() and re-runs only missing stages
     val done = store.markers()
@@ -365,7 +348,7 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.read(spark).count() == 3) // ≡ commit(A ∪ B), exactly once
   }
 
-  test("SQL INSERT INTO commits an atomic snapshot; identical replay is a no-op") {
+  test("SQL INSERT INTO commits an atomic snapshot; a replay appends") {
     import spark.implicits._
     val (store, dir) = freshStore()
     store.commit(Seq((1L, "a")).toDF("k", "v"), "ev", "m1")
@@ -379,28 +362,20 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.manifests().size == 2)
     assert(spark.sql(s"SELECT * FROM $cat.ev").count() == 3)
 
-    // the IDENTICAL statement replayed: semantic-hash marker makes it
-    // a no-op — exactly-once at the snapshot level, surfaced in SQL
+    // the IDENTICAL statement replayed appends its rows again, as in
+    // standard SQL: two identical rows may be two real events
     spark.sql(s"INSERT INTO $cat.ev VALUES (2, 'b'), (3, 'c')")
-    assert(store.manifests().size == 2)
-    assert(spark.sql(s"SELECT * FROM $cat.ev").count() == 3)
-
-    // a semantically different insert commits a new snapshot...
-    spark.sql(s"INSERT INTO $cat.ev VALUES (4, 'd')")
     assert(store.manifests().size == 3)
+    assert(spark.sql(s"SELECT * FROM $cat.ev").count() == 5)
+
+    // a different insert commits a new snapshot too...
+    spark.sql(s"INSERT INTO $cat.ev VALUES (4, 'd')")
+    assert(store.manifests().size == 4)
     // ...and the log stays time-travelable across the SQL commits
     assert(spark.sql(s"SELECT * FROM $cat.ev VERSION AS OF 2").count() == 3)
-    assert(spark.sql(s"SELECT * FROM $cat.ev").count() == 4)
+    assert(spark.sql(s"SELECT * FROM $cat.ev").count() == 6)
     // programmatic and SQL reads agree (one store, one snapshot log)
-    assert(store.read(spark, stage = Some("ev")).count() == 4)
-
-    // escape hatch (ADVICE r4): a user who MEANS to append an
-    // identical literal row again can switch the digest no-op off
-    spark.conf.set("spark.graft.sql.dedupLiteralInserts", "false")
-    try {
-      spark.sql(s"INSERT INTO $cat.ev VALUES (4, 'd')")
-      assert(spark.sql(s"SELECT * FROM $cat.ev").count() == 5)
-    } finally spark.conf.unset("spark.graft.sql.dedupLiteralInserts")
+    assert(store.read(spark, stage = Some("ev")).count() == 6)
   }
 
   test("SQL INSERT replicates the stage's partition layout; hidden stages rejected; source-reading inserts append") {
@@ -460,8 +435,7 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(e.getMessage.contains("recorded without replayable transform SQL"),
       s"expected the pre-r5 hidden-manifest reject, got: ${e.getMessage}")
 
-    // a source-reading insert (not literal-only) APPENDS on every run:
-    // plan-equality is not data-equality for external inputs
+    // a source-reading insert APPENDS on every run as well
     store.commit(Seq((1L, "s")).toDF("k", "v"), "src", "ms")
     store.commit(Seq((0L, "z")).toDF("k", "v"), "dst", "md")
     val before = store.manifests().size
@@ -470,18 +444,12 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.manifests().size == before + 2)
     assert(spark.sql(s"SELECT * FROM $cat.dst").count() == 3)
 
-    // time-dependent literals also append every run: current_date()
-    // over a literal leaf canonicalizes identically across days, so
-    // deduping it would silently drop tomorrow's row
+    // and so do time- and environment-dependent literals
     store.commit(Seq(("seed", "2020-01-01")).toDF("v", "d"), "log", "ml")
     spark.sql(s"INSERT INTO $cat.log VALUES ('deploy', CAST(current_date() AS STRING))")
     spark.sql(s"INSERT INTO $cat.log VALUES ('deploy', CAST(current_date() AS STRING))")
     assert(spark.sql(s"SELECT * FROM $cat.log").count() == 3)
 
-    // env-dependent niladics append every run too (ADVICE r4): the
-    // same statement run by a DIFFERENT user inserts different data,
-    // so deduping on plan equality would silently lose rows — the
-    // childless-non-literal guard fails safe without naming the fn
     spark.sql(s"INSERT INTO $cat.log VALUES ('who', current_user())")
     spark.sql(s"INSERT INTO $cat.log VALUES ('who', current_user())")
     assert(spark.sql(s"SELECT * FROM $cat.log").count() == 5)
@@ -579,14 +547,14 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(e2.getMessage.contains("snapshot(s) 42 "), e2.getMessage)
   }
 
-  test("partitioned stage: as-of isolation, schema evolution, stats pruning over file manifests") {
+  test("partitioned stage: as-of isolation and schema evolution") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val (store, _) = freshStore()
     store.commit(Seq(("a", "p1", 1L), ("b", "p2", 2L)).toDF("v", "pc", "k"),
-      "s", "m1", partitionBy = Seq("pc"), statsCols = Seq("k"))
+      "s", "m1", partitionBy = Seq("pc"))
     store.commit(Seq(("c", "p1", 10L)).toDF("v", "pc", "k"),
-      "s", "m2", partitionBy = Seq("pc"), statsCols = Seq("k"))
+      "s", "m2", partitionBy = Seq("pc"))
 
     // as-of reads select file lists per manifest — snapshot isolation
     // holds even though all files share one hive tree
@@ -596,16 +564,11 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.read(spark, stage = Some("s"))
       .where(col("pc") === "p1").count() == 2)
 
-    // manifest stats prune whole partitioned snapshots at planning time
-    assert(store.readPruned(spark, "k", 5L, 20L, stage = Some("s"))
-      .collect().map(_.getString(0)).toSeq == Seq("c"))
-    assert(store.readPruned(spark, "k", 100L, 200L, stage = Some("s")).count() == 0)
-
     // additive schema evolution across partitioned snapshots: the
     // layout-group union serves the unified schema, old rows null
     store.commit(Seq(("d", "p2", 3L, "extra")).toDF("v", "pc", "k", "x"),
       "s", "m3", partitionBy = Seq("pc"))
-    val ev = store.read(spark, stage = Some("s"), evolveSchema = true)
+    val ev = store.read(spark, stage = Some("s"))
     assert(ev.columns.contains("x") && ev.count() == 4)
     assert(ev.where(col("x").isNotNull).collect().map(_.getString(0)).toSeq == Seq("d"))
   }
@@ -754,33 +717,27 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(store.compact(spark, "tri").isEmpty)
   }
 
-  test("compact preserves a partitioned+hidden layout and re-derives stats") {
+  test("compact preserves a partitioned+hidden layout") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val (store, _) = freshStore()
     def rows(lo: Long, hi: Long) =
       (lo to hi).map(i => (i, s"u$i", i * 3600L)).toDF("id", "name", "ts")
     store.commit(rows(1, 4), "evt", "m1", partitionBy = Seq("name"),
-      hiddenPartitions = Seq("hour" -> (col("ts").cast("long") / 3600L).cast("long")),
-      statsCols = Seq("id"))
+      hiddenPartitions = Seq("hour" -> (col("ts").cast("long") / 3600L).cast("long")))
     store.commit(rows(5, 8), "evt", "m2", partitionBy = Seq("name"),
-      hiddenPartitions = Seq("hour" -> (col("ts").cast("long") / 3600L).cast("long")),
-      statsCols = Seq("id"))
+      hiddenPartitions = Seq("hour" -> (col("ts").cast("long") / 3600L).cast("long")))
 
     val cid = store.compact(spark, "evt")
     assert(cid.nonEmpty)
     val cm = store.liveManifests().filter(_.stage == "evt")
     assert(cm.size == 1)
-    // layout spec preserved; stats re-derived over the folded data
+    // layout spec preserved
     assert(cm.head.parts == Seq("name") && cm.head.hidden == Seq("hour"))
-    assert(cm.head.metrics.get("min_id").contains(1L))
-    assert(cm.head.metrics.get("max_id").contains(8L))
     // logical schema unchanged (hidden column still projected away)
     val got = store.read(spark, stage = Some("evt"))
     assert(got.columns.toSet == Set("id", "name", "ts"))
     assert(got.count() == 8)
-    // stats-pruned read keeps skipping at planning time
-    assert(store.readPruned(spark, "id", 100, 200, stage = Some("evt")).count() == 0)
   }
 
   test("expireReplaced reclaims superseded data; the ledger and latest reads survive") {
@@ -858,5 +815,30 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(!java.nio.file.Files.exists(tmpDir))
     assert(!java.nio.file.Files.exists(treeOrphan.resolve("snap-77-orphan.parquet")))
     assert(store.vacuumOrphans() == 0)
+  }
+
+  test("a store moved to another root reads back and vacuums nothing live") {
+    import spark.implicits._
+    val (store, dir) = freshStore()
+    store.commit(Seq((1L, "a")).toDF("k", "v"), "flat", "m1")
+    store.commit(Seq((2L, "b")).toDF("k", "p"), "pt", "m2", partitionBy = Seq("p"))
+    store.commitBuckets(Seq((3L, "c", 0), (4L, "d", 1)).toDF("k", "v", "bucket"),
+      "bk", "bucket", Seq(0, 1), b => s"bk-$b")
+    val stages = Seq("flat", "pt", "bk")
+    def rows(s: SnapshotStore) =
+      stages.map(st => s.read(spark, stage = Some(st)).collect().map(_.toString).toSet)
+    val before = rows(store)
+    // manifests record data paths relative to the root
+    assert(!Files.readString(Paths.get(dir, "_snapshots", "2.json")).contains(dir))
+
+    val newRoot = Files.createTempDirectory("snapstore-moved").resolve("store")
+    Files.move(Paths.get(dir), newRoot)
+    val moved = SnapshotStore.forRoot(newRoot.toString)
+    assert(moved.manifests().forall(_.dir.startsWith(newRoot.toString)))
+    assert(rows(moved) == before)
+    assert(moved.hasLiveData("flat", "m1") && moved.hasLiveData("pt", "m2") &&
+      moved.hasLiveData("bk", "bk-0") && moved.hasLiveData("bk", "bk-1"))
+    assert(moved.vacuumOrphans() == 0)
+    assert(rows(moved) == before)
   }
 }
